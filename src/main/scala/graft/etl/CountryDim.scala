@@ -10,14 +10,16 @@ import org.apache.spark.sql.functions._
   * a small country dimension broadcast-joined to the data on the
   * normalized name, with tiers:
   *   1. exact match on normalized name (broadcast hash join, codegen'd);
-  *   2. fuzzy fallback: unmatched rows (few) cross-joined against the
-  *      broadcast dim, best `levenshtein` distance ≤ 2 wins, ties broken
+  *   2. fuzzy fallback, a column expression over the same rows: the dim
+  *      rides the plan as a literal array, and a row tier 1 missed takes
+  *      the entry with the least `levenshtein` distance ≤ 2, ties broken
   *      by alphabetical code for determinism;
   *   3. still unmatched → NULL, which the quality gate then reports
   *      (ETL_DAG.py:149-151,196-199 semantics).
   *
-  * At 100 TB the fact side never shuffles: tier 1 is a broadcast join and
-  * tier 2 only touches the residue of tier 1.
+  * At 100 TB the fact side never shuffles and is scanned once: tier 1 is
+  * a broadcast join, and tier 2 is evaluated only for the rows tier 1
+  * left null, inside the same projection.
   */
 object CountryDim {
 
@@ -68,21 +70,17 @@ object CountryDim {
       .drop("__cd_name")
     if (!fuzzy) return exact
 
-    val matched = exact.filter(col("alpha3").isNotNull)
-    // tier 2: only the (few) unmatched rows pay the theta join; the dim is
-    // broadcast so this is a map-side nested loop over ~60 rows. A row id
-    // keeps duplicate input rows distinct through the best-match window.
-    val residue = exact.filter(col("alpha3").isNull).drop("alpha3")
-      .withColumn("__rid", monotonically_increasing_id())
-    val best = residue.join(d,
-        levenshtein(normalize(col(countryCol)), col("__cd_name")) <= 2, "left")
-      .withColumn("__rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__rid"))
-          .orderBy(levenshtein(normalize(col(countryCol)), col("__cd_name")).asc,
-            col("alpha3").asc_nulls_last)))
-      .filter(col("__rank") === 1)
-      .drop("__cd_name", "__rank", "__rid")
-    matched.unionByName(best)
+    // tier 2: the dim is collected once on the driver (the built-in dim is
+    // a local relation, so no job runs) and inlined as a literal array;
+    // `coalesce` evaluates the scan over it only when tier 1 gave null.
+    // Structs order by (distance, code), so `array_min` keeps the
+    // alphabetical tie-break.
+    val entries = d.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val norm = normalize(col(countryCol))
+    val best = array_min(filter(
+      transform(typedlit(entries), e =>
+        struct(levenshtein(norm, e("_1")).as("d"), e("_2").as("c"))),
+      x => x("d") <= 2))("c")
+    exact.withColumn("alpha3", coalesce(col("alpha3"), best))
   }
 }

@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{Path, UnsupportedFileSystemException}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -69,9 +70,17 @@ object Ingest {
   def rename(df: DataFrame, renames: Map[String, String]): DataFrame =
     df.withColumnsRenamed(renames)
 
-  /** S4: fail fast naming the missing file (ETL_DAG.py:60-68). */
-  def requireFiles(paths: Seq[String]): Unit = {
-    val missing = paths.filterNot(p => new java.io.File(p).exists())
+  /** S4: fail fast naming every missing file (ETL_DAG.py:60-68). Paths
+    * resolve through the session's Hadoop FileSystem, so plain paths and
+    * URIs (`file://`, `hdfs://`, `s3a://`) are checked where Spark will
+    * read them; a scheme with no FileSystem counts as missing. */
+  def requireFiles(spark: SparkSession, paths: Seq[String]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val missing = paths.filterNot { p =>
+      val path = new Path(p)
+      try path.getFileSystem(conf).exists(path)
+      catch { case _: UnsupportedFileSystemException => false }
+    }
     if (missing.nonEmpty)
       throw new ConfigError(s"source file(s) not found: ${missing.mkString(", ")}")
   }

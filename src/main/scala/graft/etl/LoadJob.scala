@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,9 +8,13 @@ import org.apache.spark.sql.functions._
   * read → rename → resolve COUNTRY → quality gate → truncate-equivalent
   * overwrite writes in FK-safe order (dims before fact, ETL_DAG.py:227-229).
   *
-  * Spark shape: everything stays lazy until the gate's single-pass count
-  * aggregates and the final writes; "truncate then bulk insert"
-  * (ETL_DAG.py:211-225) is `write.mode("overwrite")` (S6-S7). Row counts
+  * Spark shape: one scan per source. Every table's rule counters and row
+  * count ride its own staging write (`Quality.observed`), so the gate
+  * costs no pass of its own and no table is read back. All three tables
+  * are staged before any is promoted: a violation anywhere publishes
+  * nothing, which is the reference's validate-all-then-load order
+  * (ETL_DAG.py:90-142 before :211-229). "Truncate then bulk insert"
+  * (ETL_DAG.py:211-225) is the staging-to-published swap. Row counts
   * are returned like the reference's success-flag + nrows check.
   */
 object LoadJob {
@@ -46,11 +51,14 @@ object LoadJob {
 
   /** Run the full pipeline from three CSV paths into `outDir` parquet.
     * Fails with ConfigError / ValidationError / LoadError like the
-    * reference's typed error taxonomy (ETL_DAG.py:231-239). */
+    * reference's typed error taxonomy (ETL_DAG.py:231-239). On any
+    * staging failure no table is published and no staging dir is left.
+    * Promotion is one filesystem swap per table, dims before fact; if a
+    * swap itself fails, the tables promoted before it stay published. */
   def run(spark: SparkSession, salesCsv: String, productsCsv: String,
           customersCsv: String, outDir: String): Seq[Result] = {
     log.info("validating source files")
-    Ingest.requireFiles(Seq(salesCsv, productsCsv, customersCsv))
+    Ingest.requireFiles(spark, Seq(salesCsv, productsCsv, customersCsv))
 
     val sales = Ingest.rename(
       Ingest.readCsv(spark, salesCsv, Ingest.salesSchema), Ingest.salesRenames)
@@ -64,77 +72,99 @@ object LoadJob {
     val customers = CountryDim.resolve(customers0, "COUNTRY", CountryDim.dim(spark))
       .withColumn("COUNTRY", col("alpha3"))
 
-    // P4: required columns, then P5-P11 single-pass gates per table.
+    // P4: required columns.
     Quality.requireColumns(sales, Ingest.salesRenames.values.toSeq)
     Quality.requireColumns(products, Ingest.productsRenames.values.toSeq)
     Quality.requireColumns(customers0, Ingest.customersRenames.values.toSeq)
-    Quality.gate(sales, salesChecks, "sales")
-    Quality.gate(products, productChecks, "products")
-    Quality.gate(customers, customerChecks, "customers")
 
-    // S6-S8: overwrite ≡ truncate+load, dims before fact.
-    def write(df: DataFrame, name: String): Result =
-      try {
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-        val rows = spark.read.parquet(s"$outDir/$name").count()
-        log.info(s"loaded $name: $rows rows")
-        Result(name, rows)
-      } catch {
-        case e: Exception =>
-          log.error(s"failed loading $name", e)
-          throw new LoadError(s"failed loading $name", e)
+    // P5-P11 ride the staging writes, in the gate order sales, products,
+    // customers, so the first failing table is the one named. Each table
+    // is observed before its reshape: the checks read the source columns.
+    val staged = Seq[(String, DataFrame, Seq[Check], String, DataFrame => DataFrame)](
+      ("sales", sales, salesChecks, "fact_table",
+        _.withColumn("TRANSACTION_DATE", try_to_date(col("TRANSACTION_DATE")))),
+      ("products", products, productChecks, "products", identity),
+      ("customers", customers, customerChecks, "customers", _.drop("alpha3")))
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val rows = staged.map { case (table, df, checks, name, shape) =>
+        name -> stage(fs, df, checks, s"$outDir/$name", table)(shape)
+      }.toMap
+      // S6-S8: promote dims before fact.
+      Seq("products", "customers", "fact_table").map { name =>
+        promote(fs, s"$outDir/$name", name)
+        log.info(s"loaded $name: ${rows(name)} rows")
+        Result(name, rows(name))
       }
-
-    Seq(
-      write(products.drop("alpha3"), "products"),
-      write(customers.drop("alpha3"), "customers"),
-      write(sales.withColumn("TRANSACTION_DATE", try_to_date(col("TRANSACTION_DATE"))),
-        "fact_table"))
+    } catch {
+      case e: Exception =>
+        staged.foreach { case (_, _, _, name, _) =>
+          try fs.delete(stagingOf(s"$outDir/$name"), true)
+          catch { case c: Exception => e.addSuppressed(c) }
+        }
+        throw e
+    }
   }
 
   /** Stage-then-promote write with a zero-extra-pass quality gate: the
     * rule counters ride the write action itself (`Quality.observed`),
     * the output lands in `<path>.staging`, and only if every rule passes
-    * is it promoted to `path` with a filesystem rename. One scan total —
-    * `run`'s gate-then-write shape scans twice, which at 100 TB is a
-    * whole extra pass over the fact table. On violation the staging dir
-    * is removed and the published path is never touched. */
+    * is it promoted to `path` with a filesystem rename. One scan total,
+    * with no validation pass before the write and no read-back after it.
+    * On violation the staging dir is removed and the published path is
+    * never touched. */
   def writeValidated(df: DataFrame, checks: Seq[Check], path: String,
                      table: String): Result = {
-    val spark = df.sparkSession
-    val staging = new org.apache.hadoop.fs.Path(path + ".staging")
-    val retired = new org.apache.hadoop.fs.Path(path + ".old")
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val rows = stage(fs, df, checks, path, table)(identity)
+    promote(fs, path, table)
+    log.info(s"loaded $table (observed gate): $rows rows")
+    Result(table, rows)
+  }
+
+  private def stagingOf(path: String) = new Path(path + ".staging")
+
+  /** Write `shape(df)` to `<path>.staging` with `checks` observed on `df`
+    * during that write; return the observed row count. A violation
+    * raises the gate's ValidationError, any other failure a LoadError,
+    * and either way the staging dir is removed first. */
+  private def stage(fs: FileSystem, df: DataFrame, checks: Seq[Check], path: String,
+                    table: String)(shape: DataFrame => DataFrame): Long = {
+    val staging = stagingOf(path)
     val (instrumented, obs) = Quality.observed(df, checks, table)
-    val rows =
-      try {
-        instrumented.write.mode("overwrite").parquet(staging.toString)
-        // row count rides the same observation — no read-back job
-        Quality.assertObserved(obs, checks, table)
-      } catch {
-        case e: Exception =>
-          try fs.delete(staging, true)
-          catch { case c: Exception => e.addSuppressed(c) }
-          e match {
-            case v: ValidationError => throw v
-            case _ => throw new LoadError(s"failed staging $table", e)
-          }
-      }
-    // Swap, never delete-then-rename: the published path stays readable
-    // until the new data is in place, so a crash mid-promote leaves
-    // either the old or the new table, never neither.
+    try {
+      shape(instrumented).write.mode("overwrite").parquet(staging.toString)
+      // row count rides the same observation — no read-back job
+      Quality.assertObserved(obs, checks, table)
+    } catch {
+      case e: Exception =>
+        try fs.delete(staging, true)
+        catch { case c: Exception => e.addSuppressed(c) }
+        e match {
+          case v: ValidationError => throw v
+          case _ =>
+            log.error(s"failed staging $table", e)
+            throw new LoadError(s"failed staging $table", e)
+        }
+    }
+  }
+
+  /** Publish `<path>.staging` at `path`. Swap, never delete-then-rename:
+    * the published path stays readable until the new data is in place,
+    * so a crash mid-promote leaves either the old or the new table,
+    * never neither. */
+  private def promote(fs: FileSystem, path: String, table: String): Unit = {
+    val dest = new Path(path)
+    val retired = new Path(path + ".old")
     fs.delete(retired, true)
     val hadOld = fs.exists(dest)
     if (hadOld && !fs.rename(dest, retired))
       throw new LoadError(s"could not retire published $table at $dest")
-    if (!fs.rename(staging, dest)) {
+    if (!fs.rename(stagingOf(path), dest)) {
       if (hadOld) fs.rename(retired, dest) // roll back to the old table
       throw new LoadError(s"could not promote $table staging to $dest")
     }
     fs.delete(retired, true)
-    log.info(s"loaded $table (observed gate): $rows rows")
-    Result(table, rows)
   }
 
   /** Catalog twin of [[writeValidated]] — the reference loader's

@@ -56,18 +56,18 @@ object Quality {
       .agg(count(lit(1)).as("violations"))
       .select(lit(rule).as("rule"), col("violations"))
 
+  /** Name of the row-count metric `observed` always appends, so callers
+    * get the sink's row count from the same action for free. */
+  val RowCountMetric = "__rows"
+
   /** Zero-extra-pass gate: attaches the rule counters to the frame via
     * `Dataset.observe`, so they materialize during the SAME action that
     * consumes it (typically the sink write) — at 100 TB the gate costs
     * no second scan at all, where `gate` pays one validation scan before
     * the load. The trade: rows are already written when a violation
     * surfaces, so this suits the stage-then-promote pattern
-    * (`LoadJob.writeValidated`) where the staged output is only
-    * published after `assertObserved` passes. */
-  /** Name of the row-count metric `observed` always appends, so callers
-    * get the sink's row count from the same action for free. */
-  val RowCountMetric = "__rows"
-
+    * (`LoadJob.writeValidated`, `LoadJob.run`) where the staged output is
+    * only published after `assertObserved` passes. */
   def observed(df: DataFrame, checks: Seq[Check], table: String): (DataFrame, Observation) = {
     val obs = Observation(s"quality_$table")
     val counters = checks.map(c =>

@@ -70,6 +70,79 @@ class LoadJobSpec extends SparkSpec {
     assert(e.getMessage.contains("nope.csv"))
   }
 
+  test("loads from file:// URIs") {
+    val dir = tmp()
+    val (s, p, c) = cleanInputs(dir)
+    val results = LoadJob.run(spark, s"file://$s", s"file://$p", s"file://$c",
+      s"file://$dir/out")
+    assert(results.map(_.rows) == Seq(2L, 2L, 2L))
+    // every missing path is named, including one whose scheme has no FileSystem
+    val e = intercept[ConfigError] {
+      LoadJob.run(spark, s"file://$s", s"file://$dir/nope.csv",
+        "nosuchfs://bucket/gone.csv", s"$dir/out")
+    }
+    assert(e.getMessage.contains("nope.csv") && e.getMessage.contains("gone.csv"))
+  }
+
+  private def published(out: String): Map[String, Set[Int]] =
+    Seq("products" -> "PRODUCT_ID", "customers" -> "CUSTOMER_ID",
+        "fact_table" -> "TRANSACTION_ID").map { case (t, key) =>
+      t -> spark.read.parquet(s"$out/$t").collect().map(_.getAs[Int](key)).toSet
+    }.toMap
+
+  private def leftovers(out: String): Seq[String] =
+    new java.io.File(out).list().toSeq
+      .filter(n => n.endsWith(".staging") || n.endsWith(".old"))
+
+  test("a failing table publishes nothing; a clean re-run replaces every table") {
+    val dir = tmp()
+    val out = s"$dir/out"
+    val (s, p, c) = cleanInputs(dir)
+    LoadJob.run(spark, s, p, c, out)
+    val first = published(out)
+    assert(first == Map("products" -> Set(100, 101), "customers" -> Set(10, 11),
+      "fact_table" -> Set(1, 2)))
+
+    // customers is staged last, after sales and products staged cleanly
+    val bad = write(dir, "bad_customers", Seq(
+      "CustomerID,Name,Email,Country", "12,Cy,cy@z.net,Atlantis"))
+    val e = intercept[ValidationError] { LoadJob.run(spark, s, p, bad, out) }
+    assert(e.getMessage.contains("COUNTRY"))
+    assert(published(out) == first, "a failed load must leave every published table as it was")
+    assert(leftovers(out).isEmpty, s"left behind: ${leftovers(out)}")
+
+    val next = Seq(
+      write(dir, "sales2", Seq("TransactionID,Date,CustomerID,ProductID,Amount",
+        "3,2024-03-01,12,102,1.00")),
+      write(dir, "products2", Seq("ProductID,ProductName,Category,Price",
+        "102,Gizmo,Tools,2.00")),
+      write(dir, "customers2", Seq("CustomerID,Name,Email,Country",
+        "12,Cy,cy@z.net,Spain")))
+    val results = LoadJob.run(spark, next(0), next(1), next(2), out)
+    assert(results.map(_.rows) == Seq(1L, 1L, 1L))
+    assert(published(out) == Map("products" -> Set(102), "customers" -> Set(12),
+      "fact_table" -> Set(3)))
+    assert(leftovers(out).isEmpty, s"left behind: ${leftovers(out)}")
+  }
+
+  test("run reads each source once, with no read-back") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val dir = tmp()
+    val (s, p, c) = cleanInputs(dir)
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      LoadJob.run(spark, s, p, c, s"$dir/out")
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(read.get == 2 + 2 + 2, "sales + products + customers rows, each read once")
+  }
+
   test("missing config keys are all listed") {
     val e = intercept[ConfigError] {
       Ingest.requireConfig(Map("A" -> "1"), Seq("A", "B", "C"))
