@@ -59,6 +59,18 @@ object Similarity {
   private[graft] def normN(a: Column): Column =
     sqrt(graft.functions.DotProduct.dot_product(a, a))
 
+  /** Normalize an (vec_id, embedding) frame to (vec_id, x) — q273's
+    * `vn` exactly (in-order self-dot norm, zero-norm rows dropped).
+    * q276/q283, the index artifact and the streaming encode sink read
+    * the corpus through this one fold, so the frozen-arm encode is the
+    * SAME fold on every face. */
+  private[graft] def normalizeFrame(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), asDouble(col("embedding")).as("v0"))
+      .withColumn("nrm", normN(col("v0")))
+      .filter(col("nrm") > 0)
+      .select(col("vec_id"),
+        transform(col("v0"), x => x / col("nrm")).as("x"))
+
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
@@ -418,6 +430,18 @@ object Similarity {
   private[graft] def ivfAssign(cents: Seq[(Long, Seq[Double])],
       v: Column): Column =
     graft.functions.NearestCosineCentroid.nearest_cos_centroid(v, cents)
+
+  /** `src` (vec_id, x) plus its nearest coarse centroid `cid` and the
+    * residual `rv` = x − centroid[cid] — the input every residual-PQ
+    * trainer ([[pqBooksBatch]]) reads. */
+  private[ext] def residuals(cents: Array[(Long, Seq[Double])],
+      src: DataFrame): DataFrame = {
+    val centMap = typedlit(cents.toMap)
+    src.withColumn("cid", ivfAssign(cents.toSeq, col("x")))
+      .withColumn("rv",
+        zip_with(col("x"), element_at(centMap, col("cid")),
+          (a, b) => a - b))
+  }
 
   /** Struct array of (cos to each centroid, -cid); sort_array desc picks
     * highest cos with SMALLEST cid on ties (matching ORDER BY cos DESC,
@@ -2863,6 +2887,19 @@ object Similarity {
     * element-wise integer addition. */
   val DriftBatches = 8
 
+  /** Width of one ingest batch over the RAW embeddings (pre norm
+    * filter): ceil((maxId+1)/B) — the twin's (MAX(vec_id) + B) // B.
+    * One bounded aggregate job. */
+  private[graft] def ingestWidth(embs: DataFrame): Long = {
+    val maxId = embs.agg(max(col("vec_id"))).head().getLong(0)
+    (maxId + DriftBatches) / DriftBatches
+  }
+
+  /** The STANDING corpus on the ingest axis: batches 0‥DriftBatches-2
+    * of `width`-wide vec_id ranges (the last batch is the arrival). */
+  private[graft] def standingSlice(e: DataFrame, width: Long): DataFrame =
+    e.filter(expr(s"vec_id div $width") < DriftBatches - 1)
+
   /** Vector count packed at the tail of a Gram buffer. */
   private[graft] def gramCount(g: Seq[Long]): Long =
     g(Dim * (Dim + 1) / 2 + Dim)
@@ -2931,9 +2968,7 @@ object Similarity {
   private[graft] def cumGramBuffers(spark: SparkSession,
       embs: DataFrame): Seq[(Long, Seq[Long])] = {
     import spark.implicits._
-    val maxId = embs.agg(max(col("vec_id"))).head().getLong(0)
-    // ceil((maxId+1)/B) — the twin's (MAX(vec_id) + B) // B
-    val width = (maxId + DriftBatches) / DriftBatches
+    val width = ingestWidth(embs)
     val packed = embs
       .select(expr(s"vec_id div $width").as("batch"),
         transform(col("embedding"),
@@ -4051,7 +4086,11 @@ object Similarity {
     * driver round-trips instead of 4 and the per-tag stages run
     * concurrently inside one job (guide §1.2 / §2.6). Per-tag values
     * are bit-identical to the sequential trainer: every group key
-    * carries its tag and the grid sums are order-free BIGINT folds. */
+    * carries its tag and the grid sums are order-free BIGINT folds.
+    * The one Scala residual-PQ Lloyd loop: q273 (raw + whitened
+    * spaces), q276/q283 (frozen + rebuilt arms) and, with one tag, the
+    * q277/q280 index-artifact generation builds (`IndexArtifact.build`)
+    * all train here. */
   private[ext] def pqBooksBatch(
       arms: Seq[(String, DataFrame, Int, Int)])
       : Map[String, Seq[Seq[(Long, Seq[Double])]]] = {
@@ -4190,13 +4229,6 @@ object Similarity {
     }.toMap
     val cbs = ivfCodebooks(spaces.map { case (tag, _, _, _) =>
       tag -> eBy(tag) })
-    def assignOn(src: DataFrame, tag: String): DataFrame = {
-      val centMap = typedlit(cbs(tag).toMap)
-      src.withColumn("cid", ivfAssign(cbs(tag).toSeq, col("x")))
-        .withColumn("rv",
-          zip_with(col("x"), element_at(centMap, col("cid")),
-            (a, b) => a - b))
-    }
     // PQ residual training: literal seeds (first PqK residuals), then
     // ONE Lloyd-stats job covering every subspace AND space (q111).
     // Trainer collects read the NARROW corpus (the fan-out exchange
@@ -4205,7 +4237,7 @@ object Similarity {
     // big map stage (corpus × queries, cosine + ADC + windows) runs
     // on every core.
     val booksBy = pqBooksBatch(spaces.map { case (tag, _, m, sub) =>
-      (tag, assignOn(eBy(tag), tag), m, sub) })
+      (tag, residuals(cbs(tag), eBy(tag)), m, sub) })
 
     def spaceAudit(tag: String, m: Int, sub: Int): DataFrame = {
       val e = eBy(tag)
@@ -4216,7 +4248,7 @@ object Similarity {
       // fused encode: the residual (x − centroid[cid]) subtracts INSIDE
       // the argmin kernel per subspace window — no zip_with rv
       // materialization, no slice/struct-sort per row; bit-equal to the
-      // assignOn + nearestL2∘slice chain it replaces (same two
+      // residuals + nearestL2∘slice chain it replaces (same two
       // subtractions in the same order — NearestL2Code doc)
       val codes = (0 until m).map { s =>
         graft.functions.NearestL2Code.nearest_l2_code_residual(
@@ -4871,17 +4903,10 @@ object Similarity {
     // — measured); the audit-side encode/scoring stage is the big
     // map (corpus × query cohort, cosine + ADC + two windows), so it
     // reads the WIDENED corpus and runs on every core.
-    def assignOn(src: DataFrame, tag: String): DataFrame = {
-      val centMap = typedlit(cbs(tag).toMap)
-      src.withColumn("cid", ivfAssign(cbs(tag).toSeq, col("x")))
-        .withColumn("rv",
-          zip_with(col("x"), element_at(centMap, col("cid")),
-            (a, b) => a - b))
-    }
     val eW = widen(e)
     val booksBy = pqBooksBatch(arms.map { case (tag, train) =>
       (tag,
-        assignOn(e, tag).join(train.select(col("vec_id")),
+        residuals(cbs(tag), e).join(train.select(col("vec_id")),
           Seq("vec_id"), "left_semi"),
         PqM, PqSub)
     })
@@ -4996,17 +5021,9 @@ object Similarity {
     * arrival batch and assert the frozen arm pays recall for it, and
     * a same-distribution arrival where it doesn't). */
   def ivfPqMaintainOn(spark: SparkSession, embs: DataFrame): DataFrame = {
-    val maxId = embs.agg(max(col("vec_id"))).head().getLong(0)
-    val width = (maxId + DriftBatches) / DriftBatches
-    val e = embs
-      .select(col("vec_id"), asDouble(col("embedding")).as("v0"))
-      .withColumn("nrm", normN(col("v0")))
-      .filter(col("nrm") > 0)
-      .select(col("vec_id"),
-        transform(col("v0"), x => x / col("nrm")).as("x"))
-      .localCheckpoint()
-    val standing = e.filter(
-      expr(s"vec_id div $width") < DriftBatches - 1)
+    val width = ingestWidth(embs)
+    val e = normalizeFrame(embs).localCheckpoint()
+    val standing = standingSlice(e, width)
     // queries = the first NQueries arrival ids — fresh traffic. A
     // LITERAL id range (width is driver-known), not ORDER BY+LIMIT,
     // so the plan's bounded-broadcast detector sees the cut
@@ -5067,17 +5084,9 @@ object Similarity {
 
   /** Core over an injectable embeddings frame (specs plant drift). */
   def retrainPolicyOn(spark: SparkSession, embs: DataFrame): DataFrame = {
-    val maxId = embs.agg(max(col("vec_id"))).head().getLong(0)
-    val width = (maxId + DriftBatches) / DriftBatches
-    val e = embs
-      .select(col("vec_id"), asDouble(col("embedding")).as("v0"))
-      .withColumn("nrm", normN(col("v0")))
-      .filter(col("nrm") > 0)
-      .select(col("vec_id"),
-        transform(col("v0"), x => x / col("nrm")).as("x"))
-      .localCheckpoint()
-    val standing = e.filter(
-      expr(s"vec_id div $width") < DriftBatches - 1)
+    val width = ingestWidth(embs)
+    val e = normalizeFrame(embs).localCheckpoint()
+    val standing = standingSlice(e, width)
     // the policy cohort as an OR of LITERAL id ranges (width is
     // driver-known): semantically `vec_id % width < PolicyQueries`,
     // but range predicates both push to the parquet scan and carry

@@ -243,7 +243,7 @@ object StreamJobs {
       if (bid <= lastBid) return // re-delivered micro-batch: no-op
       graft.ext.IndexArtifact
         .encodeUnder(cents, books,
-          graft.ext.IndexArtifact.normalizeFrame(batch))
+          graft.ext.Similarity.normalizeFrame(batch))
         .withColumn("batch_id", lit(bid))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

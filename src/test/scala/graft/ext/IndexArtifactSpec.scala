@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions._
   *  - [[IndexArtifact.ensure]] must be a genuine no-op on a fresh
   *    artifact (the serve path never retrains), and the serve plan
   *    must read the artifact, not the training pipeline;
-  *  - the persisted encoded table must equal a fresh
-  *    [[IndexArtifact.encodeUnder]] pass with the persisted
-  *    quantizers (the frozen-arm kernel the streaming sink reuses);
+  *  - each generation's persisted encoded table (raw and standing)
+  *    must equal a fresh [[IndexArtifact.encodeUnder]] pass with its
+  *    persisted quantizers (the frozen-arm kernel the streaming sink
+  *    reuses), and each build submits a pinned number of jobs;
   *  - q279's sampled-GT numbers must be internally consistent with
   *    its full-GT columns.
   */
@@ -64,26 +65,75 @@ class IndexArtifactSpec extends SparkSpec {
   }
 
   test("q277: persisted encoded table equals a fresh frozen encode") {
-    IndexArtifact.ensure(spark, sf001)
-    val (cents, books) = IndexArtifact.loadQuantizers(spark, sf001)
-    assert(cents.length == Similarity.IvfK,
-      s"codebook size must be the fixed K: ${cents.length}")
-    val fresh = IndexArtifact.encodeUnder(cents, books,
-        graft.Tables.load(spark, sf001, "embeddings")
-          .select(col("vec_id"),
-            col("embedding").cast("array<double>").as("v0"))
-          .withColumn("nrm", Similarity.norm(col("v0")))
-          .filter(col("nrm") > 0)
-          .select(col("vec_id"),
-            transform(col("v0"), x => x / col("nrm")).as("x")))
-      .collect().map(_.toSeq).toSet
-    val persisted = IndexArtifact.readEncoded(spark,
-        s"${IndexArtifact.currentDir(spark, sf001)}/encoded")
-      .select((Seq("vec_id", "cid") ++
-        (0 until Similarity.PqM).map(s => s"c$s")).map(col): _*)
-      .collect().map(_.toSeq).toSet
-    assert(fresh == persisted,
-      "the artifact's encoded rows must equal the frozen-encode kernel")
+    val embs = graft.Tables.load(spark, sf001, "embeddings")
+    val normalized = embs
+      .select(col("vec_id"),
+        col("embedding").cast("array<double>").as("v0"))
+      .withColumn("nrm", Similarity.norm(col("v0")))
+      .filter(col("nrm") > 0)
+      .select(col("vec_id"),
+        transform(col("v0"), x => x / col("nrm")).as("x"))
+    // q276's ingest axis over the RAW ids: the standing generation
+    // indexes batches 0‥DriftBatches-2
+    val maxId = embs.agg(max(col("vec_id"))).head().getLong(0)
+    val width = (maxId + Similarity.DriftBatches) / Similarity.DriftBatches
+    val standing = normalized.filter(
+      expr(s"vec_id div $width") < Similarity.DriftBatches - 1)
+    // one row per generation: (name, ensure, generation dir, corpus)
+    val generations: Seq[(String, () => Boolean, () => String,
+        org.apache.spark.sql.DataFrame)] = Seq(
+      ("raw", () => IndexArtifact.ensure(spark, sf001),
+        () => IndexArtifact.currentDir(spark, sf001), normalized),
+      ("standing", () => IndexArtifact.ensureStanding(spark, sf001),
+        () => IndexArtifact.currentStandingDir(spark, sf001), standing))
+    generations.foreach { case (gen, ensure, dir, corpus) =>
+      ensure()
+      val (cents, books) = IndexArtifact.readQuantizers(spark, dir())
+      assert(cents.length == Similarity.IvfK,
+        s"$gen: codebook size must be the fixed K: ${cents.length}")
+      val fresh = IndexArtifact.encodeUnder(cents, books, corpus)
+        .collect().map(_.toSeq).toSet
+      val persisted = IndexArtifact.readEncoded(spark, s"${dir()}/encoded")
+        .select((Seq("vec_id", "cid") ++
+          (0 until Similarity.PqM).map(s => s"c$s")).map(col): _*)
+        .collect().map(_.toSeq).toSet
+      assert(fresh.nonEmpty && fresh == persisted,
+        s"$gen: the artifact's encoded rows must equal the frozen-encode " +
+          s"kernel: fresh-only=${(fresh diff persisted).take(3)} " +
+          s"persisted-only=${(persisted diff fresh).take(3)}")
+    }
+  }
+
+  /** Spark jobs `f` submits, counted on the listener bus. */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("index builds: a raw and a standing generation build submit " +
+      "the pinned number of jobs") {
+    // corpus resolve + fingerprint + checkpoints + coarse and PQ
+    // training collects + four writes (the standing build adds its
+    // ingest-width read): one more Spark job moves these counts
+    deleteRecursively(
+      java.nio.file.Paths.get(IndexArtifact.artifactRoot(sf001)))
+    deleteRecursively(
+      java.nio.file.Paths.get(IndexArtifact.standingRoot(sf001)))
+    val raw = jobsOf(assert(IndexArtifact.ensure(spark, sf001)))
+    val standing = jobsOf(assert(IndexArtifact.ensureStanding(spark, sf001)))
+    assert((raw, standing) == (15, 18),
+      s"build job counts (raw, standing) moved: ($raw, $standing)")
   }
 
   test("q282: the serve scan physically prunes to the probed cid " +

@@ -617,7 +617,7 @@ class StreamJobsSpec extends SparkSpec {
       .drop("batch_id").collect().map(_.toSeq).toSet
     val (cents, books) = IndexArtifact.loadQuantizers(spark, sf001)
     val want = IndexArtifact.encodeUnder(cents, books,
-        IndexArtifact.normalizeFrame(embs))
+        Similarity.normalizeFrame(embs))
       .collect().map(_.toSeq).toSet
     assert(got == want,
       s"frozen-encode replay drift: got-only=${(got diff want).take(3)} " +
