@@ -10,33 +10,43 @@ object Bench {
     * cold vs 2.3s steady — whole-stage codegen compilation of the
     * prefix-join pipeline dominates the first run), because min-of-2 is
     * exactly what removes that compile tax from the reported number;
-    * only the genuinely-long tail (≥15s steady) skips its repeat. */
-  def timeOnce(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    * only the genuinely-long tail (≥15s steady) skips its repeat.
+    * None when the query threw: its time to failure is no query time. */
+  def timeOnce(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Option[Double] = {
     val t0 = System.nanoTime()
     // toRdd.count(), not count(): Dataset.count() collapses to a
     // count(1) agg that elides sorts and expensive projections, which
     // would under-measure; materializing the final InternalRows runs
     // the full physical plan without collecting to the driver.
-    try { fn(spark, sfDir).queryExecution.toRdd.count() }
-    catch { case _: Throwable => -1L }
+    val ran =
+      try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e"); false }
     val dt = (System.nanoTime() - t0) / 1e9
     // drain scratch caches between reps: keeps the rep honest (no
     // free ride on the previous rep's cache) and bounds storage
     Scratch.drain(spark)
-    dt
+    if (ran) Some(dt) else None
   }
 
+  /** Per-query min over the reps of every selected query that ran, and
+    * the names of the queries that threw on any rep: a failed query
+    * has no time, so it stays out of the times and the total. */
   def runSuite(spark: SparkSession, sfDir: String,
       selected: Map[String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame],
-      reps: Int, repCap: Double): Map[String, Double] =
-    selected.map { case (name, fn) =>
-      val first = timeOnce(spark, sfDir, fn)
-      val times = first +: (2 to reps)
-        .filter(_ => first < repCap).map(_ => timeOnce(spark, sfDir, fn))
-      name -> times.min
+      reps: Int, repCap: Double): (Map[String, Double], Set[String]) = {
+    val runs = selected.map { case (name, fn) =>
+      val first = timeOnce(spark, sfDir, name, fn)
+      name -> (first +: (2 to reps).filter(_ => first.exists(_ < repCap))
+        .map(_ => timeOnce(spark, sfDir, name, fn)))
     }
+    val failed = runs.collect { case (n, ts) if ts.contains(None) => n }.toSet
+    (runs.collect { case (n, ts) if !failed(n) => n -> ts.flatten.min },
+      failed)
+  }
 
   /** Steady-time reference for the outlier retry: SCALING.json's
     * per-query times for this sfDir (t_big or t_small, whichever side
@@ -77,13 +87,14 @@ object Bench {
     * until nothing stays flagged or maxSweeps runs out, so one more
     * stall DURING the retry pass can't freeze in either. Returns
     * (final times, first-pass raw values of every flagged query —
-    * kept verbatim so contamination stays visible in the report). */
+    * kept verbatim so contamination stays visible in the report —
+    * and the queries whose retry threw, which leave the times). */
   def retryOutliers(spark: SparkSession, sfDir: String,
       selected: Map[String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame],
       results: Map[String, Double], repCap: Double,
-      steady: Map[String, Double],
-      maxSweeps: Int = 2): (Map[String, Double], Map[String, Double]) = {
+      steady: Map[String, Double], maxSweeps: Int = 2)
+      : (Map[String, Double], Map[String, Double], Set[String]) = {
     def flaggedIn(rs: Map[String, Double]): Set[String] =
       rs.filter { case (q, t) =>
         steady.get(q) match {
@@ -95,21 +106,27 @@ object Bench {
       }.keySet
     val firstFlagged = flaggedIn(results).map(q => q -> results(q)).toMap
     var current = results
+    var failed = Set.empty[String]
     var pending = firstFlagged.keySet
     var sweep = 0
     while (pending.nonEmpty && sweep < maxSweeps) {
       val retried = pending.toSeq.map { q =>
-        q -> timeOnce(spark, sfDir, selected(q)) }
-      current = current ++ retried.map { case (q, t) =>
+        q -> timeOnce(spark, sfDir, q, selected(q)) }
+      val threw = retried.collect { case (q, None) => q }
+      failed ++= threw
+      current = current -- threw ++ retried.collect { case (q, Some(t)) =>
         q -> math.min(t, current(q)) }
       pending = flaggedIn(current.view.filterKeys(pending).toMap)
       sweep += 1
     }
-    (current, firstFlagged)
+    (current, firstFlagged, failed)
   }
 
   private def jsonMap(m: Iterable[(String, Double)]): String =
     m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  private def jsonNames(ns: Iterable[String]): String =
+    ns.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -118,15 +135,15 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
-      // events fixture is TIMESTAMP(NANOS) parquet; needed before the
-      // footer warmup below, not just at first Events query
+      // events fixture is TIMESTAMP(NANOS) parquet in older rounds
+      // (Tables.load also sets this for every events load)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     // ERROR: WARN spam (WindowExec/cache notices) otherwise floods the
     // harness tail around the one JSON result line
     spark.sparkContext.setLogLevel("ERROR")
     // warm up the session (task scheduling, codegen, shuffle machinery,
-    // parquet footer paths) so the first timed query doesn't absorb
+    // the parquet scan path) so the first timed query doesn't absorb
     // JVM/session init — the groupBy forces an Exchange, which the
     // plain sum would not
     spark.range(1000).selectExpr("id % 10 as k", "id")
@@ -136,10 +153,7 @@ object Bench {
       .join(org.apache.spark.sql.functions.broadcast(
         spark.range(7).selectExpr("id as k")), "k")
       .groupBy("k").agg(org.apache.spark.sql.functions.sum("m")).collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    // touch every fixture footer so scan setup is off the clock
-    Tables.names.foreach(n =>
-      spark.read.parquet(s"$sfDir/$n.parquet").schema)
+    Tables.load(spark, sfDir, "region").count()
     // optional args: run only queries whose name starts with one of them
     // (local iteration aid; the driver passes no args → full suite).
     // A no-args run drops the declared fixture-scale exact references
@@ -178,14 +192,17 @@ object Bench {
       // the same stall-retry shield as the headline bench: a one-off
       // environment stall on either side would otherwise fabricate (or
       // mask) a scale-trend flag
-      val (tSmall, _) = retryOutliers(spark, small, selected,
-        runSuite(spark, small, selected, reps, repCap), repCap,
-        steadyTimes(small)._1)
-      val (tBig, _) = retryOutliers(spark, big, selected,
-        runSuite(spark, big, selected, reps, repCap), repCap,
-        steadyTimes(big)._1)
-      val ratios = selected.keys.toSeq.sorted.map { q =>
-        q -> tBig(q) / math.max(tSmall(q), 1e-9) }
+      def timed(dir: String): (Map[String, Double], Set[String]) = {
+        val (raw, failedRun) = runSuite(spark, dir, selected, reps, repCap)
+        val (ts, _, failedRetry) = retryOutliers(spark, dir, selected, raw,
+          repCap, steadyTimes(dir)._1)
+        (ts, failedRun ++ failedRetry)
+      }
+      val (tSmall, failedSmall) = timed(small)
+      val (tBig, failedBig) = timed(big)
+      // a query that failed on either side has no ratio
+      val ratios = tSmall.keySet.intersect(tBig.keySet).toSeq.sorted.map {
+        q => q -> tBig(q) / math.max(tSmall(q), 1e-9) }
       val flagged = ratios.filter { case (q, r) =>
         r > threshold && tSmall(q) >= floorSec }
       val json =
@@ -194,7 +211,8 @@ object Bench {
           s""""t_small":${jsonMap(tSmall.toSeq.sortBy(_._1))},""" +
           s""""t_big":${jsonMap(tBig.toSeq.sortBy(_._1))},""" +
           s""""ratio":${jsonMap(ratios)},""" +
-          s""""flagged":${jsonMap(flagged)}}"""
+          s""""flagged":${jsonMap(flagged)},""" +
+          s""""failed":${jsonNames(failedSmall ++ failedBig)}}"""
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("SCALING.json"), json + "\n")
       println(s"""{"metric":"scaling_flagged","value":${flagged.size},""" +
@@ -203,10 +221,13 @@ object Bench {
       return
     }
 
-    val raw = runSuite(spark, sfDir, selected, reps, repCap)
+    val (raw, failedRun) = runSuite(spark, sfDir, selected, reps, repCap)
     val (steady, steadyNote) = steadyTimes(sfDir)
-    val (results, flaggedRaw) =
+    val (results, flaggedRaw, failedRetry) =
       retryOutliers(spark, sfDir, selected, raw, repCap, steady)
+    // "failed" names every query that threw: none of them counts in
+    // "queries" or the total
+    val failed = jsonNames(failedRun ++ failedRetry)
     val qs = jsonMap(results)
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // "retried" records the pre-retry raw value of every flagged query
@@ -225,7 +246,7 @@ object Bench {
     val full = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,""" +
       s""""queries":$qs,"retried":${jsonMap(flaggedRaw.toSeq.sortBy(_._1))},""" +
       s""""steady_ratio":${jsonMap(ratios)},""" +
-      s""""steady_ref":"$steadyNote","sf":"$sfDir"}"""
+      s""""steady_ref":"$steadyNote","failed":$failed,"sf":"$sfDir"}"""
     // The driver captures a bounded tail of stdout: a ~4KB 104-query
     // line can get its head (and the total) truncated away, which is
     // exactly what nulled BENCH_r02's parse. So (a) persist the full
@@ -240,7 +261,7 @@ object Bench {
       catch { case _: Throwable => () }
     println(full)
     val slowest = jsonMap(results.toSeq.sortBy(-_._2).take(5))
-    println(s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$slowest,"sf":"$sfDir","full":"BENCH_FULL.json"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$slowest,"failed":$failed,"sf":"$sfDir","full":"BENCH_FULL.json"}""")
     spark.stop()
   }
 }

@@ -51,8 +51,6 @@ object JobProfile {
     // session warmup (Bench's shape)
     spark.range(1000).selectExpr("id % 10 as k", "id")
       .groupBy("k").count().collect()
-    Tables.names.foreach(n =>
-      spark.read.parquet(s"$sfDir/$n.parquet").schema)
 
     val selected = SparkEntry.queries.filter { case (n, _) =>
       prefixes.exists(n.startsWith) }

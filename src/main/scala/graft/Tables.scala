@@ -1,20 +1,61 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** Loaders for the driver-shipped parquet fixtures (TESTDATA.md).
   *
   * Every query receives `(spark, sfDir)` and loads what it needs through
   * here, so the parquet scans stay lazy and Catalyst can push filters and
-  * prune columns into the scan. Temp views are registered on demand so the
-  * same queries can also run as `spark.sql` text against the identical
-  * table names the DuckDB oracle uses.
+  * prune columns into the scan. Each table is read through its declared
+  * [[schemas]] entry, so a load runs no Spark job: no footer is read to
+  * infer a schema, and the first job a query runs is its own. Temp views
+  * are registered on demand so the same queries can also run as
+  * `spark.sql` text against the identical table names the DuckDB oracle
+  * uses.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
+  /** A schema of nullable fields, as Spark reads every file source. */
+  private[graft] def struct(fields: (String, DataType)*): StructType =
+    StructType(fields.map { case (n, t) => StructField(n, t) })
+
+  /** The fixtures' schemas, field for field what Spark infers from the
+    * files (TablesSpec compares them at every shipped scale, so a fixture
+    * change fails there instead of reading nulls). Every field is
+    * nullable, as Spark makes every file-source field; the timestamps are
+    * written without UTC adjustment, so they read as TIMESTAMP_NTZ. */
+  val schemas: ListMap[String, StructType] = ListMap(
+    "region" -> struct("r_regionkey" -> IntegerType, "r_name" -> StringType),
+    "nation" -> struct("n_nationkey" -> IntegerType, "n_name" -> StringType,
+      "n_regionkey" -> IntegerType),
+    "customer" -> struct("c_custkey" -> LongType, "c_name" -> StringType,
+      "c_nationkey" -> IntegerType, "c_acctbal" -> DoubleType,
+      "c_mktsegment" -> StringType),
+    "supplier" -> struct("s_suppkey" -> LongType, "s_name" -> StringType,
+      "s_nationkey" -> IntegerType, "s_acctbal" -> DoubleType),
+    "part" -> struct("p_partkey" -> LongType, "p_name" -> StringType,
+      "p_brand" -> StringType, "p_type" -> StringType,
+      "p_size" -> IntegerType, "p_retailprice" -> DoubleType),
+    "orders" -> struct("o_orderkey" -> LongType, "o_custkey" -> LongType,
+      "o_orderstatus" -> StringType, "o_totalprice" -> DoubleType,
+      "o_orderdate" -> TimestampNTZType, "o_orderpriority" -> StringType),
+    "lineitem" -> struct("l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampNTZType),
+    "events" -> struct("event_id" -> LongType, "ts" -> TimestampNTZType,
+      "user_id" -> LongType, "event_type" -> StringType,
+      "value" -> DoubleType, "props" -> StringType),
+    "documents" -> struct("doc_id" -> LongType, "text" -> StringType,
+      "lang" -> StringType, "source" -> StringType, "n_chars" -> LongType),
+    "embeddings" -> struct("vec_id" -> LongType,
+      "embedding" -> ArrayType(FloatType), "label" -> IntegerType))
+
+  val names: Seq[String] = schemas.keys.toSeq
 
   /** NO loader-level scan widening — tried THREE ways this round and
     * reverted on measurement (OPTIMIZATION_r14.md "lineitem widen
@@ -53,6 +94,8 @@ object Tables {
     ((bytes + maxSplit - 1) / maxSplit).toInt
   }
 
+  /** Fixture `name` of `sfDir`, read through its declared schema: lazy,
+    * and no Spark job runs until the caller's first action. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // the events fixture is parquet TIMESTAMP(NANOS), which Spark only
     // reads behind this flag; set it here so NO caller depends on some
@@ -60,7 +103,7 @@ object Tables {
     // converts the long to a µs timestamp)
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet")
   }
 
   /** Register all fixture tables as temp views (names as in TESTDATA.md). */

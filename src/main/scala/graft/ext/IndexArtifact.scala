@@ -6,6 +6,8 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  LongType, StructType}
 
 /** Index-as-artifact: train ONCE, serve MANY (round-11 verdict #3).
   *
@@ -175,13 +177,35 @@ object IndexArtifact {
     assigned.select(Seq(col("vec_id"), col("cid")) ++ codes: _*)
   }
 
+  /** Schemas of the tables [[build]], [[indexMerge]] and [[indexCompact]]
+    * write, as Spark reads them back (IndexArtifactSpec compares each
+    * with the inferred one). [[EncodedSchema]] covers the flat
+    * `encoded_arrival_parts` and the `cid`-partitioned `encoded`,
+    * `encoded_arrival` and `encoded_arrival_compacted`, whose directory
+    * values the declared type reads as bigint. */
+  private[ext] val CentroidsSchema =
+    Tables.struct("cid" -> LongType, "cv" -> ArrayType(DoubleType))
+  private[ext] val BooksSchema = Tables.struct("s" -> IntegerType,
+    "cid" -> LongType, "cv" -> ArrayType(DoubleType))
+  private[ext] val ForwardSchema =
+    Tables.struct("vec_id" -> LongType, "x" -> ArrayType(DoubleType))
+  private[ext] val EncodedSchema = Tables.struct(
+    Seq("vec_id" -> LongType, "cid" -> LongType) ++
+      (0 until PqM).map(s => s"c$s" -> LongType): _*)
+
+  /** Read artifact tables through their declared schema: no job runs
+    * to infer one from the footers. */
+  private def readTable(spark: SparkSession, schema: StructType,
+      paths: String*): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
+
   /** Collect a generation's broadcast-sized quantizers. */
   private[ext] def readQuantizers(spark: SparkSession, dir: String)
       : (Array[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]]) = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = readTable(spark, CentroidsSchema, s"$dir/centroids")
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq)
       .sortBy(_._1)
-    val books = spark.read.parquet(s"$dir/books")
+    val books = readTable(spark, BooksSchema, s"$dir/books")
       .collect().map(r =>
         (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)
@@ -195,21 +219,18 @@ object IndexArtifact {
       : (Array[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]]) =
     readQuantizers(spark, currentDir(spark, sfDir))
 
-  /** Read an encoded table (one or more of standing/arrival dirs),
-    * restoring the schema [[encodeUnder]] produces: the write
-    * partitions by `cid`, so partition discovery types the directory
-    * values as int and appends the column LAST — cast and reorder so
-    * every reader (census, serve joins, specs) sees one stable
-    * shape. */
+  /** Read an encoded table (one or more of standing/arrival dirs) in
+    * the column order [[encodeUnder]] produces: the write partitions by
+    * `cid`, so the scan appends the column LAST — reorder so every
+    * reader (census, serve joins, specs) sees one stable shape. */
   private[ext] def readEncoded(spark: SparkSession, paths: String*)
       : DataFrame =
     // one scan per root, unioned: multi-root partition discovery would
     // demand a shared basePath, and separate scans keep each root
     // independently partition-prunable
     paths.map { p =>
-      spark.read.parquet(p)
-        .select(Seq(col("vec_id"), col("cid").cast("long").as("cid")) ++
-          (0 until PqM).map(s => col(s"c$s")): _*)
+      readTable(spark, EncodedSchema, p)
+        .select(EncodedSchema.fieldNames.map(col): _*)
     }.reduce(_ unionByName _)
 
   /** Train q273's raw arm over the (already normalized) corpus `e0`
@@ -307,10 +328,10 @@ object IndexArtifact {
     // byte-identical generation
     val dir = ensureGen(spark, sfDir, artifactRoot(sfDir), build,
       force = true)._1
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val book = spark.read.parquet(s"$dir/books")
+    val cent = readTable(spark, CentroidsSchema, s"$dir/centroids")
+    val book = readTable(spark, BooksSchema, s"$dir/books")
     val enc = readEncoded(spark, s"$dir/encoded")
-    val fwd = spark.read.parquet(s"$dir/forward")
+    val fwd = readTable(spark, ForwardSchema, s"$dir/forward")
     census(cent, "centroids", col("cid"), vecE6(col("cv")), lit(0L))
       .unionByName(census(book, "books",
         col("s").cast("long") * 4096L + col("cid"), vecE6(col("cv")),
@@ -347,7 +368,7 @@ object IndexArtifact {
     val (cents, books) = readQuantizers(spark, dir)
     val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = Similarity.ivfScores(cents, c)
-    val fwd = spark.read.parquet(s"$dir/forward")
+    val fwd = readTable(spark, ForwardSchema, s"$dir/forward")
     val enc = readEncoded(spark, s"$dir/encoded")
     val qs = fwd.filter(qpred)
       .select(col("vec_id").as("query_id"), col("x").as("qx"))
@@ -596,7 +617,7 @@ object IndexArtifact {
     val (cents, books) = readQuantizers(spark, dir)
     val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = Similarity.ivfScores(cents, c)
-    val fwd = spark.read.parquet(s"$dir/forward")
+    val fwd = readTable(spark, ForwardSchema, s"$dir/forward")
     val qs = fwd.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("x").as("qx"))
     val probes = fwd.filter(col("vec_id") < NQueries)
@@ -701,7 +722,8 @@ object IndexArtifact {
 
     val centMap = typedlit(cents.toMap)
     def scores(c: Column): Column = Similarity.ivfScores(cents, c)
-    val fwd = spark.read.parquet(s"$dir/forward", s"$dir/forward_arrival")
+    val fwd = readTable(spark, ForwardSchema, s"$dir/forward",
+      s"$dir/forward_arrival")
     val enc = readEncoded(spark, s"$dir/encoded", s"$dir/encoded_arrival")
     // fresh-traffic queries: the first NQueries arrival ids (q276's
     // literal-range cut)
@@ -810,8 +832,8 @@ object IndexArtifact {
     }
     graft.etl.Layout.compactPartitioned(spark, parts, compacted, "cid")
     val codeSum = (0 until PqM).map(s => col(s"c$s")).reduce(_ + _)
-    census(spark.read.parquet(parts), "arrival_parts", col("vec_id"),
-        codeSum, col("cid"))
+    census(readTable(spark, EncodedSchema, parts), "arrival_parts",
+        col("vec_id"), codeSum, col("cid"))
       .unionByName(census(readEncoded(spark, compacted),
         "arrival_compacted", col("vec_id"), codeSum, col("cid")))
       .orderBy("component")

@@ -32,7 +32,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("retryOutliers re-measures a query recorded far above steady") {
-    val (fixed, flagged) = Bench.retryOutliers(spark, sf001,
+    val (fixed, flagged, _) = Bench.retryOutliers(spark, sf001,
       Map("stalled" -> instant, "fine" -> instant),
       Map("stalled" -> 99.9, "fine" -> 0.4),
       repCap = 60.0,
@@ -44,7 +44,7 @@ class BenchSpec extends SparkSpec {
   }
 
   test("retryOutliers retries a >=repCap run even with no steady reference") {
-    val (fixed, flagged) = Bench.retryOutliers(spark, sf001,
+    val (fixed, flagged, _) = Bench.retryOutliers(spark, sf001,
       Map("newq" -> instant, "newq2" -> instant),
       Map("newq" -> 75.0, "newq2" -> 3.0),
       repCap = 60.0, steady = Map.empty)
@@ -57,7 +57,7 @@ class BenchSpec extends SparkSpec {
   test("retryOutliers bar is 3x steady: 2.5x stands, 4x retries") {
     // round-6 lesson: the 10x bar let broad 2-8x inflation stand
     // (~105s of the published 282.6s total); 3x is the new trigger
-    val (fixed, flagged) = Bench.retryOutliers(spark, sf001,
+    val (fixed, flagged, _) = Bench.retryOutliers(spark, sf001,
       Map("mild" -> instant, "inflated" -> instant),
       Map("mild" -> 5.0, "inflated" -> 8.0),
       repCap = 60.0,
@@ -76,7 +76,7 @@ class BenchSpec extends SparkSpec {
       if (calls.getAndIncrement() == 0) Thread.sleep(7000)
       s.range(1).toDF()
     }
-    val (fixed, flagged) = Bench.retryOutliers(spark, sf001,
+    val (fixed, flagged, _) = Bench.retryOutliers(spark, sf001,
       Map("q" -> flaky), Map("q" -> 30.0), repCap = 60.0,
       steady = Map("q" -> 2.0))
     assert(flagged == Map("q" -> 30.0))
@@ -90,9 +90,30 @@ class BenchSpec extends SparkSpec {
       (s: org.apache.spark.sql.SparkSession, _: String) => {
         Thread.sleep(1500); s.range(1).toDF()
       }
-    val (fixed, _) = Bench.retryOutliers(spark, sf001,
+    val (fixed, _, _) = Bench.retryOutliers(spark, sf001,
       Map("q" -> slow), Map("q" -> 1.1), repCap = 60.0,
       steady = Map("q" -> 0.05))
     assert(fixed("q") == 1.1, "a slower retry must never worsen the record")
+  }
+
+  test("a query that throws is recorded as failed, not timed") {
+    val brokenBuild = (_: org.apache.spark.sql.SparkSession, _: String) =>
+      throw new IllegalStateException("builder broke")
+    val brokenRun = (s: org.apache.spark.sql.SparkSession, _: String) =>
+      s.range(1).select(org.apache.spark.sql.functions.raise_error(
+        org.apache.spark.sql.functions.lit("execution broke"))).toDF()
+    val (times, failed) = Bench.runSuite(spark, sf001,
+      Map("ok" -> instant, "build" -> brokenBuild, "run" -> brokenRun),
+      reps = 2, repCap = 60.0)
+    assert(times.keySet == Set("ok"),
+      s"a failed query must not carry a time: $times")
+    assert(failed == Set("build", "run"))
+    // a flagged query whose retry throws leaves the times too
+    val (fixed, flagged, retryFailed) = Bench.retryOutliers(spark, sf001,
+      Map("stalled" -> brokenRun, "fine" -> instant),
+      Map("stalled" -> 99.9, "fine" -> 0.4), repCap = 60.0,
+      steady = Map("stalled" -> 1.4, "fine" -> 0.5))
+    assert(flagged.keySet == Set("stalled"))
+    assert(fixed == Map("fine" -> 0.4) && retryFailed == Set("stalled"))
   }
 }

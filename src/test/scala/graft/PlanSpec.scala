@@ -96,6 +96,27 @@ class PlanSpec extends SparkSpec {
         s"${offenders -- Set("Memo.scala", "Scratch.scala")}")
   }
 
+  test("parquet reads in main source declare their schema") {
+    // an unpinned read.parquet( infers the schema with a Spark job on
+    // every call; fixtures go through Tables.load and artifact tables
+    // through IndexArtifact's declared schemas, written
+    // read.schema(...).parquet( so they don't match here. Only reads
+    // of caller-supplied paths may infer: the stream source directory
+    // (its ts type follows the generator), the stream sink check, and
+    // Layout's compactions.
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("StreamJobs.scala", "Layout.scala")
+    val offenders = java.nio.file.Files
+      .walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p)
+        .contains("read.parquet("))
+      .map(_.getFileName.toString).toSet
+    assert((offenders -- allowed).isEmpty,
+      s"schema-inferring parquet reads: ${offenders -- allowed}")
+  }
+
   test("no declared query plans a cartesian product or unbounded BNLJ") {
     // A BroadcastNestedLoopJoin is fine ONLY when its build side is a
     // CONSTANT-bounded broadcast — cost stays O(scan) at any scale:

@@ -25,4 +25,21 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   val sf001 = "/root/testdata/sf0.001"
+
+  /** Spark jobs `f` submits, counted on the listener bus. */
+  protected def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      f
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
 }

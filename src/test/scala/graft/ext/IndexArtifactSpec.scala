@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   *    must equal a fresh [[IndexArtifact.encodeUnder]] pass with its
   *    persisted quantizers (the frozen-arm kernel the streaming sink
   *    reuses), and each build submits a pinned number of jobs;
+  *  - every table the artifact reads back through a declared schema
+  *    must still be written in that schema;
   *  - q279's sampled-GT numbers must be internally consistent with
   *    its full-GT columns.
   */
@@ -104,23 +106,6 @@ class IndexArtifactSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs `f` submits, counted on the listener bus. */
-  private def jobsOf(f: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      f
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("index builds: a raw and a standing generation build submit " +
       "the pinned number of jobs") {
     // corpus resolve + fingerprint + checkpoints + coarse and PQ
@@ -132,8 +117,48 @@ class IndexArtifactSpec extends SparkSpec {
       java.nio.file.Paths.get(IndexArtifact.standingRoot(sf001)))
     val raw = jobsOf(assert(IndexArtifact.ensure(spark, sf001)))
     val standing = jobsOf(assert(IndexArtifact.ensureStanding(spark, sf001)))
-    assert((raw, standing) == (15, 18),
+    assert((raw, standing) == (14, 16),
       s"build job counts (raw, standing) moved: ($raw, $standing)")
+  }
+
+  test("index tables: every declared artifact schema equals the schema " +
+      "Spark infers from a fresh raw and standing generation") {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    deleteRecursively(
+      java.nio.file.Paths.get(IndexArtifact.artifactRoot(sf001)))
+    deleteRecursively(
+      java.nio.file.Paths.get(IndexArtifact.standingRoot(sf001)))
+    IndexArtifact.ensure(spark, sf001)
+    // both write their tables before returning the lazy audit frame
+    IndexArtifact.indexMerge(spark, sf001)
+    IndexArtifact.indexCompact(spark, sf001)
+    val base = Seq("centroids" -> IndexArtifact.CentroidsSchema,
+      "books" -> IndexArtifact.BooksSchema,
+      "encoded" -> IndexArtifact.EncodedSchema,
+      "forward" -> IndexArtifact.ForwardSchema)
+    val arrival = Seq("encoded_arrival" -> IndexArtifact.EncodedSchema,
+      "forward_arrival" -> IndexArtifact.ForwardSchema,
+      "encoded_arrival_parts" -> IndexArtifact.EncodedSchema,
+      "encoded_arrival_compacted" -> IndexArtifact.EncodedSchema)
+    val partitioned =
+      Set("encoded", "encoded_arrival", "encoded_arrival_compacted")
+    Seq(IndexArtifact.currentDir(spark, sf001) -> base,
+        IndexArtifact.currentStandingDir(spark, sf001) -> (base ++ arrival))
+      .foreach { case (dir, tables) =>
+        tables.foreach { case (t, declared) =>
+          val inferred = spark.read.parquet(s"$dir/$t").schema
+          // a cid-partitioned table infers cid from its directory names
+          // as int and appends it last; the declared schema reads the
+          // same directories with cid as bigint
+          val expected =
+            if (!partitioned(t)) declared
+            else StructType(declared.filterNot(_.name == "cid") :+
+              StructField("cid", IntegerType))
+          assert(inferred == expected,
+            s"$dir/$t: declared ${declared.simpleString} vs inferred " +
+              s"${inferred.simpleString}")
+        }
+      }
   }
 
   test("q282: the serve scan physically prunes to the probed cid " +
