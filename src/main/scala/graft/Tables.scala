@@ -96,15 +96,8 @@ object Tables {
 
   /** Fixture `name` of `sfDir`, read through its declared schema: lazy,
     * and no Spark job runs until the caller's first action. */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    // the events fixture is parquet TIMESTAMP(NANOS), which Spark only
-    // reads behind this flag; set it here so NO caller depends on some
-    // earlier query having set it session-wide (Events.loadEvents then
-    // converts the long to a µs timestamp)
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.schema(schemas(name)).parquet(s"$sfDir/$name.parquet")
-  }
 
   /** Register all fixture tables as temp views (names as in TESTDATA.md). */
   def registerAll(spark: SparkSession, sfDir: String): Unit =

@@ -18,22 +18,13 @@ import org.apache.spark.sql.expressions.Window
   */
 object Events {
 
-  /** Normalize the events fixture's ts to a session-TZ µs timestamp,
-    * whatever physical type the generator wrote this round: TIMESTAMP
-    * (NANOS) surfaces as a nanos-since-epoch long behind the legacy flag
-    * (integer division — double division would lose precision above
-    * 2^53 ns); TIMESTAMP(MICROS) surfaces as TIMESTAMP_NTZ and only
-    * needs the NTZ→LTZ cast (value-preserving under the UTC session TZ
-    * every graft entrypoint pins). */
-  def loadEvents(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = Tables.load(spark, sfDir, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
+  /** The events fixture with `ts` as a session-TZ µs timestamp:
+    * [[Tables.load]] reads it through the declared TIMESTAMP_NTZ, and
+    * the NTZ→LTZ cast is value-preserving under the UTC session TZ
+    * every graft entrypoint pins. */
+  def loadEvents(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.load(spark, sfDir, "events")
+      .withColumn("ts", col("ts").cast("timestamp"))
 
   /** q18 — tumbling 1-hour windows per event_type via window(). */
   def tumbling(spark: SparkSession, sfDir: String): DataFrame = {

@@ -155,27 +155,13 @@ object IndexArtifact {
   private def normalized(spark: SparkSession, sfDir: String): DataFrame =
     Similarity.normalizeFrame(Tables.load(spark, sfDir, "embeddings"))
 
-  /** Assign + encode a normalized (vec_id, x) frame under FROZEN
-    * quantizers — the map-only incremental-maintenance kernel (q276's
-    * frozen arm): nearest coarse centroid, residual, one PQ code per
-    * subspace. At 100 TB this one batch-sized scan IS the entire
-    * maintenance cost of the frozen index. */
+  /** [[IvfPq.encode]], the frozen-quantizer encode, under the
+    * artifact's name for it: a generation's persisted `encoded` table
+    * and the streaming sink's output must equal it row for row
+    * (IndexArtifactSpec, StreamJobsSpec). */
   private[graft] def encodeUnder(cents: Array[(Long, Seq[Double])],
-      books: Seq[Seq[(Long, Seq[Double])]], e: DataFrame): DataFrame = {
-    val centMap = typedlit(cents.toMap)
-    // fused encode: the residual (x − centroid[cid]) subtracts INSIDE
-    // the per-subspace argmin kernel — no zip_with rv column, no
-    // slice/struct-sort per row; bit-equal to the idiom it replaces
-    // (same two subtractions in the same order — NearestL2Code doc)
-    val assigned = e
-      .withColumn("cid", Similarity.ivfAssign(cents.toSeq, col("x")))
-    val codes = (0 until PqM).map { s =>
-      graft.functions.NearestL2Code.nearest_l2_code_residual(
-        col("x"), element_at(centMap, col("cid")), s * PqSub, books(s))
-        .as(s"c$s")
-    }
-    assigned.select(Seq(col("vec_id"), col("cid")) ++ codes: _*)
-  }
+      books: Seq[Seq[(Long, Seq[Double])]], e: DataFrame): DataFrame =
+    IvfPq.encode(cents, books, e)
 
   /** Schemas of the tables [[build]], [[indexMerge]] and [[indexCompact]]
     * write, as Spark reads them back (IndexArtifactSpec compares each
@@ -220,7 +206,7 @@ object IndexArtifact {
     readQuantizers(spark, currentDir(spark, sfDir))
 
   /** Read an encoded table (one or more of standing/arrival dirs) in
-    * the column order [[encodeUnder]] produces: the write partitions by
+    * the column order [[IvfPq.encode]] produces: the write partitions by
     * `cid`, so the scan appends the column LAST — reorder so every
     * reader (census, serve joins, specs) sees one stable shape. */
   private[ext] def readEncoded(spark: SparkSession, paths: String*)
@@ -239,7 +225,7 @@ object IndexArtifact {
     * over [[Similarity.standingSlice]] of it (q276's ingest axis,
     * whose width derives from the RAW embeddings, pre norm filter —
     * ivfPqMaintainOn's exact axis). The PQ books train through
-    * [[Similarity.pqBooksBatch]] with one tag, the same seed collect
+    * [[IvfPq.train]] with one tag, the same seed collect
     * and per-round stats collect as q273's raw arm. The encoded corpus
     * is PARTITIONED BY COARSE LIST ID, so a serving read prunes to the
     * probed lists at the DIRECTORY level (round-12 verdict #1:
@@ -249,15 +235,11 @@ object IndexArtifact {
     val spark = e0.sparkSession
     val e = e0.localCheckpoint()
     val cents = Similarity.ivfCodebook(e)
-    val assigned = Similarity.residuals(cents, e).localCheckpoint()
-    val books = Similarity.pqBooksBatch(Seq(("x", assigned, PqM, PqSub)))("x")
-    val codes = (0 until PqM).map { s =>
-      // rv is checkpoint-materialized here; the window kernel reads it
-      // in place — bit-equal to encodeUnder's fused residual kernel
-      // (same two subtractions in the same order — NearestL2Code doc)
-      graft.functions.NearestL2Code.nearest_l2_code(
-        col("rv"), s * PqSub, books(s)).as(s"c$s")
-    }
+    val assigned = IvfPq.residuals(cents, e).localCheckpoint()
+    val books = IvfPq.train(Seq(("x", assigned, PqM, PqSub)))("x")
+    // rv is checkpoint-materialized here, so the codes read it in place
+    // — bit-equal to the fused residual encode (IvfPq.codes)
+    val codes = IvfPq.residualCodes(books)
     import spark.implicits._
     // the four table writes are independent given the checkpointed
     // inputs and the collected quantizer literals — submit them from
@@ -366,43 +348,27 @@ object IndexArtifact {
       qpred: Column = col("vec_id") < NQueries): DataFrame = {
     val dir = currentDir(spark, sfDir)
     val (cents, books) = readQuantizers(spark, dir)
-    val centMap = typedlit(cents.toMap)
-    def scores(c: Column): Column = Similarity.ivfScores(cents, c)
     val fwd = readTable(spark, ForwardSchema, s"$dir/forward")
     val enc = readEncoded(spark, s"$dir/encoded")
     val qs = fwd.filter(qpred)
       .select(col("vec_id").as("query_id"), col("x").as("qx"))
     val probes = fwd.filter(qpred)
       .select(col("vec_id").as("query_id"),
-        posexplode(transform(
-          slice(sort_array(scores(col("x")), asc = false), 1, WideProbe),
-          s => -s("ncid"))).as(Seq("pp", "pcid")))
+        posexplode(IvfPq.probes(cents, col("x"), WideProbe))
+          .as(Seq("pp", "pcid")))
       .select(col("query_id"), col("pcid"),
         (col("pp") + 1).cast("long").as("prank"))
-    // native dot kernel: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan
-    val adcTerms = graft.functions.DotProduct.dot_product(col("qx"),
-        element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        // offset-dot kernel: no per-(pair × subspace) slice allocation
-        // on the scoring scan (same fold, bit-equal)
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
+    IvfPq.scoreProbed(withForward(enc, fwd), qs, probes, cents, books)
+      .drop("pcid")
+  }
+
+  /** The encoded rows joined to their forward vectors, in the
+    * (neighbor_id, cx, cid, codes) shape [[IvfPq.scoreProbed]] reads. */
+  private def withForward(enc: DataFrame, fwd: DataFrame): DataFrame =
     enc.join(fwd.withColumnRenamed("vec_id", "fid"),
         col("vec_id") === col("fid"))
       .select(Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
         col("cid")) ++ (0 until PqM).map(s => col(s"c$s")): _*)
-      .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cid"),
-        Similarity.cosine(col("qx"), col("cx")).as("cos"),
-        adcTerms.reduceLeft(_ + _).as("adc"))
-      .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
-        col("query_id") === col("p_qid") && col("cid") === col("pcid"),
-        "left_outer")
-      .drop("p_qid", "pcid")
-  }
 
   /** [[servedScoredRanked]] read at the standard [[NProbe]] budget —
     * the q278/q279 `probed` flag, bit-identical to probing at NProbe
@@ -420,27 +386,8 @@ object IndexArtifact {
     * the forward table (audit-class). No training job appears in this
     * DataFrame's plan — the artifact scans stand where the Lloyd
     * pipelines stood in q273. */
-  def indexServe(spark: SparkSession, sfDir: String): DataFrame = {
-    val scored = servedScored(spark, sfDir)
-    val k = TopK.toLong
-    scored
-      .withColumn("r_ex", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .withColumn("r_adc", row_number().over(
-        Window.partitionBy(col("query_id"), col("probed"))
-          .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
-      .groupBy("query_id").agg(
-        sum(when(col("probed"), 1L).otherwise(0L)).as("scanned_rows"),
-        sum(when(col("r_ex") <= k, 1L).otherwise(0L)).as("gt_k"),
-        sum(when(col("probed") && col("r_adc") <= k && col("r_ex") <= k,
-          1L).otherwise(0L)).as("hits"))
-      .select(col("query_id"), col("scanned_rows"), col("gt_k"),
-        col("hits"),
-        round(col("hits").cast("double") / col("gt_k").cast("double"), 6)
-          .as("recall"))
-      .orderBy("query_id")
-  }
+  def indexServe(spark: SparkSession, sfDir: String): DataFrame =
+    IvfPq.recallAudit(servedScored(spark, sfDir), "adc").orderBy("query_id")
 
   /** q279 — SAMPLED exact-GT serving audit: the executable 100 TB form
     * of q273/q278's "exact-GT arm is audit-class" caveat (round-11
@@ -469,13 +416,7 @@ object IndexArtifact {
       .withColumn("samp",
         Dedup.sampleHit(col("neighbor_id"), ":gt",
           Dedup.RecallSamplePerMille))
-    val ranked = scored
-      .withColumn("r_ex", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .withColumn("r_adc", row_number().over(
-        Window.partitionBy(col("query_id"), col("probed"))
-          .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
+    val ranked = IvfPq.recallRanks(scored, "adc")
       .withColumn("r_sx", row_number().over(
         Window.partitionBy(col("query_id"), col("samp"))
           .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
@@ -615,39 +556,24 @@ object IndexArtifact {
   def indexServePruned(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = currentDir(spark, sfDir)
     val (cents, books) = readQuantizers(spark, dir)
-    val centMap = typedlit(cents.toMap)
-    def scores(c: Column): Column = Similarity.ivfScores(cents, c)
     val fwd = readTable(spark, ForwardSchema, s"$dir/forward")
     val qs = fwd.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("x").as("qx"))
     val probes = fwd.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"),
-        explode(transform(
-          slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
-          s => -s("ncid"))).as("pcid"))
+        explode(IvfPq.probes(cents, col("x"), NProbe)).as("pcid"))
     // phase 1's driver-side step: the probed-list union becomes a
     // literal partition cut (24 values max — the serving plan step)
     val probedCids = probes.select("pcid").distinct()
       .collect().map(_.getLong(0)).sorted
     val enc = readEncoded(spark, s"$dir/encoded")
       .filter(col("cid").isin(probedCids: _*))
-    // native dot kernel: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan
-    val adcTerms = graft.functions.DotProduct.dot_product(col("qx"),
-        element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        // offset-dot kernel: no per-(pair × subspace) slice allocation
-        // on the scoring scan (same fold, bit-equal)
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
     enc
       .join(broadcast(probes), col("cid") === col("pcid"))
       .join(broadcast(qs), Seq("query_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cid"), adcTerms.reduceLeft(_ + _).as("adc"))
+        col("cid"), IvfPq.adcScore(col("qx"), cents, books).as("adc"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
@@ -714,68 +640,21 @@ object IndexArtifact {
     val arrival = normalized(spark, sfDir)
       .filter(col("vec_id") >= arrivalLo)
     awaitAll(
-      () => encodeUnder(cents, books, arrival)
+      () => IvfPq.encode(cents, books, arrival)
         .write.partitionBy("cid").mode("overwrite")
         .parquet(s"$dir/encoded_arrival"),
       () => arrival.write.mode("overwrite")
         .parquet(s"$dir/forward_arrival"))
 
-    val centMap = typedlit(cents.toMap)
-    def scores(c: Column): Column = Similarity.ivfScores(cents, c)
     val fwd = readTable(spark, ForwardSchema, s"$dir/forward",
       s"$dir/forward_arrival")
     val enc = readEncoded(spark, s"$dir/encoded", s"$dir/encoded_arrival")
     // fresh-traffic queries: the first NQueries arrival ids (q276's
     // literal-range cut)
-    val qs = fwd.filter(col("vec_id") >= arrivalLo &&
-        col("vec_id") < arrivalLo + NQueries)
-      .select(col("vec_id").as("query_id"), col("x").as("qx"))
-    val probes = fwd.filter(col("vec_id") >= arrivalLo &&
-        col("vec_id") < arrivalLo + NQueries)
-      .select(col("vec_id").as("query_id"),
-        explode(transform(
-          slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
-          s => -s("ncid"))).as("pcid"))
-    // native dot kernel: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan
-    val adcTerms = graft.functions.DotProduct.dot_product(col("qx"),
-        element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        // offset-dot kernel: no per-(pair × subspace) slice allocation
-        // on the scoring scan (same fold, bit-equal)
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
-    val k = TopK.toLong
-    enc.join(fwd.withColumnRenamed("vec_id", "fid"),
-        col("vec_id") === col("fid"))
-      .select(Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-        col("cid")) ++ (0 until PqM).map(s => col(s"c$s")): _*)
-      .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cid"),
-        Similarity.cosine(col("qx"), col("cx")).as("cos"),
-        adcTerms.reduceLeft(_ + _).as("adc"))
-      .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
-        col("query_id") === col("p_qid") && col("cid") === col("pcid"),
-        "left_outer")
-      .drop("p_qid")
-      .withColumn("probed", col("pcid").isNotNull)
-      .withColumn("r_ex", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .withColumn("r_adc", row_number().over(
-        Window.partitionBy(col("query_id"), col("probed"))
-          .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
-      .groupBy("query_id").agg(
-        sum(when(col("probed"), 1L).otherwise(0L)).as("scanned_rows"),
-        sum(when(col("r_ex") <= k, 1L).otherwise(0L)).as("gt_k"),
-        sum(when(col("probed") && col("r_adc") <= k && col("r_ex") <= k,
-          1L).otherwise(0L)).as("hits"))
-      .select(col("query_id"), col("scanned_rows"), col("gt_k"),
-        col("hits"),
-        round(col("hits").cast("double") / col("gt_k").cast("double"), 6)
-          .as("recall"))
+    IvfPq.probeAudit(withForward(enc, fwd),
+        fwd.filter(col("vec_id") >= arrivalLo &&
+          col("vec_id") < arrivalLo + NQueries),
+        cents, books)
       .orderBy("query_id")
   }
 
@@ -825,7 +704,7 @@ object IndexArtifact {
     val compacted = s"$dir/encoded_arrival_compacted"
     deleteRecursively(Paths.get(parts))
     (0 until CompactSubBatches).foreach { sb =>
-      encodeUnder(cents, books,
+      IvfPq.encode(cents, books,
           arrival.filter(col("vec_id") % CompactSubBatches === sb))
         .repartition(PartsFilesPerSubBatch)
         .write.mode("append").parquet(parts)

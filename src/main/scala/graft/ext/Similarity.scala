@@ -353,7 +353,7 @@ object Similarity {
         // Project ABOVE Generate, re-evaluating the K-cosine argmax per
         // EXPLODED row (Dim× per vector — measured 2.2× on this job)
         e.toDF("vec_id", "tv").select(
-            ivfAssign(codes(tag).toSeq, col("tv")).as("cid"),
+            IvfPq.assign(codes(tag).toSeq, col("tv")).as("cid"),
             col("tv"))
           .select(col("cid"), posexplode(col("tv")).as(Seq("i", "x")))
           .groupBy("cid", "i")
@@ -421,36 +421,6 @@ object Similarity {
        |$out AS MATERIALIZED (SELECT cid, cv FROM ${out}_k$IvfRounds)""".stripMargin
   }
 
-  /** Fused native argmax over a literal codebook — bit-equal to
-    * `-sort_array(ivfScores(...), desc)(0)("ncid")` (same cosine
-    * kernel, Spark's NaN-safe double total order, ties to the
-    * smallest cid) without K struct allocations + an interpreted
-    * struct sort per row (guide §4; measured dominant in every
-    * assignment/Lloyd/encode stage at K=16). */
-  private[graft] def ivfAssign(cents: Seq[(Long, Seq[Double])],
-      v: Column): Column =
-    graft.functions.NearestCosineCentroid.nearest_cos_centroid(v, cents)
-
-  /** `src` (vec_id, x) plus its nearest coarse centroid `cid` and the
-    * residual `rv` = x − centroid[cid] — the input every residual-PQ
-    * trainer ([[pqBooksBatch]]) reads. */
-  private[ext] def residuals(cents: Array[(Long, Seq[Double])],
-      src: DataFrame): DataFrame = {
-    val centMap = typedlit(cents.toMap)
-    src.withColumn("cid", ivfAssign(cents.toSeq, col("x")))
-      .withColumn("rv",
-        zip_with(col("x"), element_at(centMap, col("cid")),
-          (a, b) => a - b))
-  }
-
-  /** Struct array of (cos to each centroid, -cid); sort_array desc picks
-    * highest cos with SMALLEST cid on ties (matching ORDER BY cos DESC,
-    * cid). */
-  private[ext] def ivfScores(cents: Array[(Long, Seq[Double])], v: Column): Column =
-    array(cents.toSeq.map { case (cid, cv) =>
-      struct(cosine(v, typedlit(cv)).as("cos"), lit(-cid).as("ncid"))
-    }: _*)
-
   /** q25 — IVF ANN. Assignment is a MAP-ONLY pass: the (small) codebook
     * is collected and inlined as literal vectors, so each row computes
     * its nearest centroid with zero shuffle — exactly how IVF ships its
@@ -460,15 +430,12 @@ object Similarity {
     val e = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = ivfCodebook(e)
-    def scores(v: Column): Column = ivfScores(cents, v)
 
     val assigned = e
-      .withColumn("cid", ivfAssign(cents.toSeq, col("v")))
+      .withColumn("cid", IvfPq.assign(cents.toSeq, col("v")))
     val probes = assigned.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        explode(transform(
-          slice(sort_array(scores(col("v")), asc = false), 1, NProbe),
-          s => -s("ncid"))).as("cid"))
+        explode(IvfPq.probes(cents, col("v"), NProbe)).as("cid"))
     val scored = probes.join(assigned.select(col("cid"), col("vec_id"), col("v")), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -763,12 +730,10 @@ object Similarity {
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val cents = ivfCodebook(e)
     val maxP = ProbeSweep.max
-    val assigned = e.withColumn("cid", ivfAssign(cents.toSeq, col("v")))
+    val assigned = e.withColumn("cid", IvfPq.assign(cents.toSeq, col("v")))
     val probes = assigned.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        posexplode(transform(
-          slice(sort_array(ivfScores(cents, col("v")), asc = false), 1, maxP),
-          s => -s("ncid"))))
+        posexplode(IvfPq.probes(cents, col("v"), maxP)))
       .select(col("query_id"), col("qv"),
         (col("pos") + 1).as("prank"), col("col").as("cid"))
     // each vector lives in exactly ONE list, so (query, neighbor) pairs
@@ -944,7 +909,7 @@ object Similarity {
       // feeds the agg the same rows in the same order — values
       // unchanged, including this kernel's adjudicated float fold
       val stats = e
-        .select(ivfAssign(code, col("v")).as("cid"), col("v"))
+        .select(IvfPq.assign(code, col("v")).as("cid"), col("v"))
         .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
         .groupBy("cid", "i")
         .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
@@ -1011,7 +976,7 @@ object Similarity {
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val code = kmeansCodebook(e, KmeansK, KmeansRounds)
     val a = e.select(col("vec_id"),
-      ivfAssign(code, col("v")).as("cid"), col("v"))
+      IvfPq.assign(code, col("v")).as("cid"), col("v"))
     val dups = a.as("x")
       .join(a.as("y"),
         col("x.cid") === col("y.cid") && col("y.vec_id") < col("x.vec_id"))
@@ -1098,7 +1063,7 @@ object Similarity {
       val subs = (0 until PqM).map { s =>
         // offset-window argmax kernel: cosine over v's [s·sub, (s+1)·sub)
         // window directly — no per-row slice allocation for the argmax
-        // (bit-equal to ivfAssign ∘ slice: same fold, same NaN-first
+        // (bit-equal to IvfPq.assign ∘ slice: same fold, same NaN-first
         // strict-greater tiebreak); the sv slice stays for the
         // posexplode payload only
         struct(lit(s).as("s"),
@@ -1128,20 +1093,10 @@ object Similarity {
     val enc = e.select(col("vec_id") +: codes: _*)
     val queries = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    // native dot kernel (ascending-index left-assoc fold, bit-equal to
-    // the HOF form — SimilaritySpec) keeps the corpus-sized ADC scoring
-    // pass inside whole-stage codegen instead of interpreting a lambda
-    // per element (guide §4: built-ins/codegen expressions in hot paths)
-    val terms = (0 until PqM).map { s =>
-      // offset-dot kernel: no per-(pair × subspace) slice allocation on
-      // the corpus × queries scoring scan (same fold, bit-equal)
-      graft.functions.DotProductOffset.dot_product_off(
-        col("qv"), s * PqSub,
-        element_at(typedlit(books(s).toMap), col(s"c$s")))
-    }
+    // cosine ADC: the subspace terms alone, no coarse term
     enc.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        terms.reduceLeft(_ + _).as("acos"))
+        IvfPq.adcTerms(col("qv"), books).reduceLeft(_ + _).as("acos"))
       .withColumn("rk", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("acos").desc, col("neighbor_id"))).cast("long"))
@@ -1323,7 +1278,7 @@ object Similarity {
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val code = kmeansCodebook(e, KmeansK, KmeansRounds)
     val a = e.select(col("vec_id"),
-      ivfAssign(code, col("v")).as("cid"), col("v"))
+      IvfPq.assign(code, col("v")).as("cid"), col("v"))
     val sizes = a.groupBy("cid").agg(count(lit(1)).as("n"))
     val ws = a.join(broadcast(sizes), Seq("cid"))
       .withColumn("n_shards", expr(s"(n + ${cap - 1}) div $cap"))
@@ -1425,7 +1380,7 @@ object Similarity {
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
     val code = kmeansCodebook(e, KmeansK, KmeansRounds)
     val a = e.select(col("vec_id"),
-      ivfAssign(code, col("v")).as("cid"), col("v"))
+      IvfPq.assign(code, col("v")).as("cid"), col("v"))
     val sizes = a.groupBy("cid").agg(count(lit(1)).as("n"))
     val shardHash = (c: Column) =>
       graft.ext.Dedup.hash60(concat_ws("|", c, lit("shard")))
@@ -2475,7 +2430,7 @@ object Similarity {
     val cents = ivfCodebook(e)
     val n = e.count() // 1-row anchor, interpolated literally
     val k = cents.length
-    e.withColumn("cid", ivfAssign(cents.toSeq, col("v")))
+    e.withColumn("cid", IvfPq.assign(cents.toSeq, col("v")))
       .groupBy("cid")
       .agg(count(lit(1)).as("n_vecs"))
       .select(col("cid"), col("n_vecs"),
@@ -3438,7 +3393,7 @@ object Similarity {
     val centsRaw = cbs("raw")
     val centsWh = cbs("white")
     def argmax(cents: Array[(Long, Seq[Double])], v: Column): Column =
-      ivfAssign(cents.toSeq, v)
+      IvfPq.assign(cents.toSeq, v)
     val k = centsRaw.length.toLong
     val census = base
       .select(explode(array(
@@ -3915,44 +3870,22 @@ object Similarity {
     def spaceAudit(tag: String): DataFrame = {
       val e = eBy(tag)
       val cents = cbs(tag)
-      def scores(c: Column): Column = ivfScores(cents, c)
-      val assigned = e.withColumn("cid", ivfAssign(cents.toSeq, col("x")))
+      val assigned = e.withColumn("cid", IvfPq.assign(cents.toSeq, col("x")))
       val qs = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"), col("x").as("qx"))
       val probes = e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("query_id"),
-          explode(transform(
-            slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
-            s => -s("ncid"))).as("pcid"))
+          explode(IvfPq.probes(cents, col("x"), NProbe)).as("pcid"))
       val scored = assigned
         .select(col("vec_id").as("neighbor_id"), col("x").as("cx"),
           col("cid"))
         .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
         .select(col("query_id"), col("neighbor_id"), col("cid"),
           cosine(col("qx"), col("cx")).as("cos"))
-        .join(broadcast(probes
-            .withColumnRenamed("query_id", "p_qid")),
-          col("query_id") === col("p_qid") &&
-            col("cid") === col("pcid"), "left_outer")
-        .drop("p_qid")
-        .withColumn("probed", col("pcid").isNotNull)
-      val k = TopK.toLong
-      val ranked = scored
-        .withColumn("r_ex", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-        .withColumn("r_pv", row_number().over(
-          Window.partitionBy(col("query_id"), col("probed"))
-            .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      ranked.groupBy("query_id").agg(
-          sum(when(col("probed"), 1L).otherwise(0L)).as("scanned_rows"),
-          sum(when(col("r_ex") <= k, 1L).otherwise(0L)).as("gt_k"),
-          sum(when(col("probed") && col("r_pv") <= k && col("r_ex") <= k,
-            1L).otherwise(0L)).as("hits"))
-        .select(lit(tag).as("space"), col("query_id"), col("scanned_rows"),
-          col("gt_k"), col("hits"),
-          round(col("hits").cast("double") / col("gt_k").cast("double"), 6)
-            .as("recall"))
+      // the probed side ranks by the same exact cosine
+      IvfPq.recallAudit(IvfPq.joinProbes(scored, probes)
+          .withColumn("probed", col("pcid").isNotNull), "cos")
+        .select(lit(tag).as("space"), col("*"))
     }
     val raw = spaceAudit("raw")
     val white =
@@ -4062,91 +3995,6 @@ object Similarity {
   val PqMWhite = 2
   private[ext] val PqSubWhite = WhitenK / PqMWhite
 
-  /** Nearest sub-codeword by SQUARED L2 (ascending, ties to the
-    * smallest cid) — the residual-PQ metric. Cosine (q111's whole-
-    * vector metric) is undefined on the zero vector, and residuals
-    * contain exact zeros BY CONSTRUCTION (every IVF centroid's own
-    * residual): the first draft trained residual books with cosine
-    * and the NaN ordering diverged between engines (Spark ranks NaN
-    * greatest, DuckDB orders the NULL-ish result last) — every code
-    * wrong. Squared L2 is total on all finite inputs, matches the
-    * IVFADC formulation (Jégou et al.), and the in-order fold is
-    * bit-equal across engines. */
-  private[ext] def nearestL2(v: Column, code: Seq[(Long, Seq[Double])]): Column =
-    sort_array(array(code.map { case (cid, cv) =>
-      struct(sqDist(v, typedlit(cv)).as("d"), lit(cid).as("cid"))
-    }: _*), asc = true)(0)("cid")
-
-  /** Batched residual-PQ book trainer over tagged (vec_id, rv) frames:
-    * per tag the EXACT q273/q276 fold — literal seeds from the first
-    * [[PqK]] residuals, then per Lloyd round one nearest-L2 assignment
-    * + integer-grid mean per (subspace, code, dim) — but the seed
-    * collect and each round's stats collect cover ALL tags as ONE
-    * tagged-union Spark job, so a two-space/two-arm query pays 2
-    * driver round-trips instead of 4 and the per-tag stages run
-    * concurrently inside one job (guide §1.2 / §2.6). Per-tag values
-    * are bit-identical to the sequential trainer: every group key
-    * carries its tag and the grid sums are order-free BIGINT folds.
-    * The one Scala residual-PQ Lloyd loop: q273 (raw + whitened
-    * spaces), q276/q283 (frozen + rebuilt arms) and, with one tag, the
-    * q277/q280 index-artifact generation builds (`IndexArtifact.build`)
-    * all train here. */
-  private[ext] def pqBooksBatch(
-      arms: Seq[(String, DataFrame, Int, Int)])
-      : Map[String, Seq[Seq[(Long, Seq[Double])]]] = {
-    val seedRows = arms.map { case (tag, tr, _, _) =>
-      tr.filter(col("vec_id") < PqK)
-        .select(lit(tag).as("tag"), col("vec_id"), col("rv"))
-    }.reduce(_ unionAll _).collect()
-    val seedsBy = arms.map { case (tag, _, _, _) =>
-      tag -> seedRows.filter(_.getString(0) == tag)
-        .map(r => r.getLong(1) -> r.getSeq[Double](2))
-        .sortBy(_._1).toSeq
-    }.toMap
-    var booksBy: Map[String, Seq[Seq[(Long, Seq[Double])]]] =
-      arms.map { case (tag, _, m, sub) =>
-        tag -> (0 until m).map { s =>
-          seedsBy(tag).map { case (cid, rv) =>
-            cid -> rv.slice(s * sub, s * sub + sub).toSeq }
-        }
-      }.toMap
-    for (_ <- 1 to PqRounds) {
-      val stats = arms.map { case (tag, tr, m, sub) =>
-        val books = booksBy(tag)
-        // codegen'd argmin kernel over the rv window (no slice/struct/
-        // sort allocations — bit-equal to the struct-sort nearestL2,
-        // measured 2.3× on this stats job); the sv slice stays for the
-        // posexplode payload only
-        val subs = (0 until m).map { s =>
-          struct(lit(s).as("s"),
-            graft.functions.NearestL2Code.nearest_l2_code(
-              col("rv"), s * sub, books(s)).as("cid"),
-            slice(col("rv"), s * sub + 1, sub).as("sv"))
-        }
-        tr.select(explode(array(subs: _*)).as("sub"))
-          .select(col("sub.s").as("s"), col("sub.cid").as("cid"),
-            posexplode(col("sub.sv")).as(Seq("i", "x")))
-          .groupBy("s", "cid", "i")
-          .agg(sum(round(col("x") * PqGrid, 0).cast("long")).as("sx"),
-            count(lit(1)).as("n"))
-          .select(lit(tag).as("tag"), col("s"), col("cid"), col("i"),
-            col("sx"), col("n"))
-      }.reduce(_ unionAll _).collect()
-      booksBy = arms.map { case (tag, _, m, _) =>
-        val mine = stats.filter(_.getString(0) == tag)
-        tag -> (0 until m).map { s =>
-          mine.filter(_.getInt(1) == s).groupBy(_.getLong(2))
-            .map { case (cid, rows) =>
-              cid -> rows.sortBy(_.getInt(3))
-                .map(r => r.getLong(4).toDouble / (r.getLong(5) * PqGrid))
-                .toSeq
-            }.toSeq.sortBy(_._1)
-        }
-      }.toMap
-    }
-    booksBy
-  }
-
   /** q273 — IVF-PQ recall-vs-scan audit, raw vs whitened: per query
     * and space, an IVF index (q25/q269's trained fixed-K codebook)
     * whose lists hold PQ RESIDUAL codes (q111's one-Lloyd-job
@@ -4236,81 +4084,16 @@ object Similarity {
     // the audit-side encode/scoring reads the WIDENED corpus so the
     // big map stage (corpus × queries, cosine + ADC + windows) runs
     // on every core.
-    val booksBy = pqBooksBatch(spaces.map { case (tag, _, m, sub) =>
-      (tag, residuals(cbs(tag), eBy(tag)), m, sub) })
+    val booksBy = IvfPq.train(spaces.map { case (tag, _, m, sub) =>
+      (tag, IvfPq.residuals(cbs(tag), eBy(tag)), m, sub) })
 
-    def spaceAudit(tag: String, m: Int, sub: Int): DataFrame = {
-      val e = eBy(tag)
-      val cents = cbs(tag)
-      val centMap = typedlit(cents.toMap)
-      def scores(c: Column): Column = ivfScores(cents, c)
-      val books = booksBy(tag)
-      // fused encode: the residual (x − centroid[cid]) subtracts INSIDE
-      // the argmin kernel per subspace window — no zip_with rv
-      // materialization, no slice/struct-sort per row; bit-equal to the
-      // residuals + nearestL2∘slice chain it replaces (same two
-      // subtractions in the same order — NearestL2Code doc)
-      val codes = (0 until m).map { s =>
-        graft.functions.NearestL2Code.nearest_l2_code_residual(
-          col("x"), element_at(centMap, col("cid")), s * sub, books(s))
-          .as(s"c$s")
-      }
-      val enc = widen(e)
-        .withColumn("cid", ivfAssign(cents.toSeq, col("x")))
-        .select(
-          Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-            col("cid")) ++ codes: _*)
-      val qs = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"), col("x").as("qx"))
-      val probes = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("query_id"),
-          explode(transform(
-            slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
-            s => -s("ncid"))).as("pcid"))
-      // ADC: exact coarse term + M compressed residual terms, added
-      // coarse-first then ascending subspace (left-assoc both engines);
-      // native dot kernel = same ascending fold, whole-stage codegen'd
-      val adcTerms =
-        graft.functions.DotProduct.dot_product(
-          col("qx"), element_at(centMap, col("cid"))) +:
-        (0 until m).map { s =>
-          // offset-dot kernel: no per-(pair × subspace) slice
-          // allocation on the scoring scan (same fold, bit-equal)
-          graft.functions.DotProductOffset.dot_product_off(
-            col("qx"), s * sub,
-            element_at(typedlit(books(s).toMap), col(s"c$s")))
-        }
-      val k = TopK.toLong
-      val scored = enc
-        .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
-        .select(col("query_id"), col("neighbor_id"), col("cid"),
-          cosine(col("qx"), col("cx")).as("cos"),
-          adcTerms.reduceLeft(_ + _).as("adc"))
-        .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
-          col("query_id") === col("p_qid") && col("cid") === col("pcid"),
-          "left_outer")
-        .drop("p_qid")
-        .withColumn("probed", col("pcid").isNotNull)
-      val ranked = scored
-        .withColumn("r_ex", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-        .withColumn("r_adc", row_number().over(
-          Window.partitionBy(col("query_id"), col("probed"))
-            .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
-      ranked.groupBy("query_id").agg(
-          sum(when(col("probed"), 1L).otherwise(0L)).as("scanned_rows"),
-          sum(when(col("r_ex") <= k, 1L).otherwise(0L)).as("gt_k"),
-          sum(when(col("probed") && col("r_adc") <= k && col("r_ex") <= k,
-            1L).otherwise(0L)).as("hits"))
-        .select(lit(tag).as("space"), col("query_id"), col("scanned_rows"),
-          col("gt_k"), col("hits"),
-          round(col("hits").cast("double") / col("gt_k").cast("double"), 6)
-            .as("recall"))
-    }
-    val raw = spaceAudit("raw", PqM, PqSub)
+    def spaceAudit(tag: String): DataFrame =
+      indexAudit(widen(eBy(tag)), eBy(tag).filter(col("vec_id") < NQueries),
+          cbs(tag), booksBy(tag))
+        .select(lit(tag).as("space"), col("*"))
+    val raw = spaceAudit("raw")
     val white =
-      if (!degenerate) spaceAudit("white", PqMWhite, PqSubWhite)
+      if (!degenerate) spaceAudit("white")
       else embs.filter(col("vec_id") < NQueries)
         .select(lit("white").as("space"), col("vec_id").as("query_id"),
           lit(null).cast("long").as("scanned_rows"),
@@ -4339,7 +4122,7 @@ object Similarity {
       // residual-PQ assignment metric: squared L2 ascending (in-order
       // fold — bit-equal to the Scala sqDist), ties to the smallest
       // cid; cosine is undefined on the exact-zero residuals every
-      // IVF centroid produces (see nearestL2)
+      // IVF centroid produces (see IvfPq.codes)
       def sqd(a: String, b: String) =
         s"""list_sum(list_transform(range($sub),
            |               j -> ($a[j + 1] - $b[j + 1])
@@ -4697,13 +4480,10 @@ object Similarity {
     * [[exactRerankPool]] so the identical greedy runs on both. */
   private def annRerankPool(e: DataFrame): DataFrame = {
     val cents = ivfCodebook(e)
-    def scores(v: Column): Column = ivfScores(cents, v)
-    val assigned = e.withColumn("cid", ivfAssign(cents.toSeq, col("v")))
+    val assigned = e.withColumn("cid", IvfPq.assign(cents.toSeq, col("v")))
     val probes = e.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
-        explode(transform(
-          slice(sort_array(scores(col("v")), asc = false), 1, NProbe),
-          s => -s("ncid"))).as("cid"))
+        explode(IvfPq.probes(cents, col("v"), NProbe)).as("cid"))
     probes
       .join(assigned.select(col("cid"), col("vec_id"), col("v")), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
@@ -4904,82 +4684,27 @@ object Similarity {
     // map (corpus × query cohort, cosine + ADC + two windows), so it
     // reads the WIDENED corpus and runs on every core.
     val eW = widen(e)
-    val booksBy = pqBooksBatch(arms.map { case (tag, train) =>
+    val booksBy = IvfPq.train(arms.map { case (tag, train) =>
       (tag,
-        residuals(cbs(tag), e).join(train.select(col("vec_id")),
+        IvfPq.residuals(cbs(tag), e).join(train.select(col("vec_id")),
           Seq("vec_id"), "left_semi"),
         PqM, PqSub)
     })
     arms.map { case (tag, _) =>
-      tag -> maintainArmAudit(e, qsel, cbs(tag), booksBy(tag), eW, tag)
+      tag -> indexAudit(eW, e.join(broadcast(qsel), Seq("vec_id")),
+          cbs(tag), booksBy(tag))
+        .select(lit(tag).as("arm"), col("*"))
     }.toMap
   }
 
-  private def maintainArmAudit(e: DataFrame, qsel: DataFrame,
-      cents: Array[(Long, Seq[Double])],
-      books: Seq[Seq[(Long, Seq[Double])]],
-      eWide: DataFrame, tag: String): DataFrame = {
-    val centMap = typedlit(cents.toMap)
-    def scores(c: Column): Column = ivfScores(cents, c)
-    // fused encode over the widened corpus: residual subtraction rides
-    // INSIDE the per-subspace argmin kernel (no zip_with rv column, no
-    // slice/struct-sort per row — bit-equal, see NearestL2Code)
-    val codes = (0 until PqM).map { s =>
-      graft.functions.NearestL2Code.nearest_l2_code_residual(
-        col("x"), element_at(centMap, col("cid")), s * PqSub, books(s))
-        .as(s"c$s")
-    }
-    val enc = eWide
-      .withColumn("cid", ivfAssign(cents.toSeq, col("x")))
-      .select(
-        Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"),
-          col("cid")) ++ codes: _*)
-    val qe = e.join(broadcast(qsel), Seq("vec_id"))
-    val qs = qe.select(col("vec_id").as("query_id"), col("x").as("qx"))
-    val probes = qe
-      .select(col("vec_id").as("query_id"),
-        explode(transform(
-          slice(sort_array(scores(col("x")), asc = false), 1, NProbe),
-          s => -s("ncid"))).as("pcid"))
-    // native dot kernels: same ascending left-assoc fold as the HOF
-    // form (bit-equal), whole-stage codegen'd on the corpus-sized scan;
-    // the offset form skips the per-(pair × subspace) slice allocation
-    val adcTerms =
-      graft.functions.DotProduct.dot_product(
-        col("qx"), element_at(centMap, col("cid"))) +:
-      (0 until PqM).map { s =>
-        graft.functions.DotProductOffset.dot_product_off(
-          col("qx"), s * PqSub,
-          element_at(typedlit(books(s).toMap), col(s"c$s")))
-      }
-    val k = TopK.toLong
-    val scored = enc
-      .join(broadcast(qs), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"), col("cid"),
-        cosine(col("qx"), col("cx")).as("cos"),
-        adcTerms.reduceLeft(_ + _).as("adc"))
-      .join(broadcast(probes.withColumnRenamed("query_id", "p_qid")),
-        col("query_id") === col("p_qid") && col("cid") === col("pcid"),
-        "left_outer")
-      .drop("p_qid")
-      .withColumn("probed", col("pcid").isNotNull)
-    scored
-      .withColumn("r_ex", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cos").desc, col("neighbor_id"))).cast("long"))
-      .withColumn("r_adc", row_number().over(
-        Window.partitionBy(col("query_id"), col("probed"))
-          .orderBy(col("adc").desc, col("neighbor_id"))).cast("long"))
-      .groupBy("query_id").agg(
-        sum(when(col("probed"), 1L).otherwise(0L)).as("scanned_rows"),
-        sum(when(col("r_ex") <= k, 1L).otherwise(0L)).as("gt_k"),
-        sum(when(col("probed") && col("r_adc") <= k && col("r_ex") <= k,
-          1L).otherwise(0L)).as("hits"))
-      .select(lit(tag).as("arm"), col("query_id"), col("scanned_rows"),
-        col("gt_k"), col("hits"),
-        round(col("hits").cast("double") / col("gt_k").cast("double"), 6)
-          .as("recall"))
-  }
+  /** The q273 audit of one trained index: encode the (widened) corpus
+    * under its quantizers and run [[IvfPq.probeAudit]] for `queries`. */
+  private def indexAudit(corpus: DataFrame, queries: DataFrame,
+      cents: IvfPq.Centroids, books: IvfPq.Books): DataFrame =
+    IvfPq.probeAudit(
+      IvfPq.encode(cents, books, corpus,
+        Seq(col("vec_id").as("neighbor_id"), col("x").as("cx"))),
+      queries, cents, books)
 
   /** q276 — frozen-vs-rebuilt index audit. The corpus splits on the
     * q265/q267 ingest axis (vec_id ranges, [[DriftBatches]] batches):

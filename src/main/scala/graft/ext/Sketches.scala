@@ -80,8 +80,7 @@ object Sketches {
   /** q87 — distinct users per event_type, exact vs the portable HLL,
     * with the relative error the 6.5%-rse sketch actually achieved. */
   def hllDistinct(spark: SparkSession, sfDir: String): DataFrame = {
-    // loadEvents, not Tables.load: the events parquet is TIMESTAMP(NANOS)
-    // and needs the legacy nanosAsLong conf even when ts isn't selected
+    // the events family's one loader; its ts cast is pruned here
     val ev = Events.loadEvents(spark, sfDir)
       .select(col("event_type"), col("user_id"))
     val est = hllEstimate(

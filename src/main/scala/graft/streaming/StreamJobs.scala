@@ -204,7 +204,7 @@ object StreamJobs {
     * (q276 prices what that staleness costs).
     *
     * Replay ≡ batch: the encode routes through the SAME
-    * [[graft.ext.IndexArtifact.encodeUnder]] kernel the batch face
+    * [[graft.ext.IvfPq.encode]] kernel the batch face
     * uses, so replaying the arrival files through this sink appends
     * row-for-row the batch frozen-arm encoding of those vectors
     * (StreamJobsSpec pins it). Same at-least-once guard and one
@@ -241,9 +241,8 @@ object StreamJobs {
     private var lastBid: Long = -1L
     def onBatch(batch: DataFrame, bid: Long): Unit = {
       if (bid <= lastBid) return // re-delivered micro-batch: no-op
-      graft.ext.IndexArtifact
-        .encodeUnder(cents, books,
-          graft.ext.Similarity.normalizeFrame(batch))
+      graft.ext.IvfPq
+        .encode(cents, books, graft.ext.Similarity.normalizeFrame(batch))
         .withColumn("batch_id", lit(bid))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

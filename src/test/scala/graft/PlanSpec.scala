@@ -96,6 +96,25 @@ class PlanSpec extends SparkSpec {
         s"${offenders -- Set("Memo.scala", "Scratch.scala")}")
   }
 
+  test("the IVF-PQ format is written only in IvfPq.scala") {
+    // the probe list, the ADC terms and the fused residual encode each
+    // have one definition; a copy elsewhere in ext/ would let the
+    // codebook layout or the ADC fold order drift between faces
+    import scala.jdk.CollectionConverters._
+    val marks = Seq("dot_product_off(", "nearest_l2_code_residual(",
+      "ivfScores(")
+    val offenders = java.nio.file.Files
+      .walk(java.nio.file.Paths.get("src/main/scala/graft/ext"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.getFileName.toString == "IvfPq.scala")
+      .flatMap { p =>
+        val text = java.nio.file.Files.readString(p)
+        marks.filter(text.contains).map(m => s"${p.getFileName}: $m")
+      }.toList
+    assert(offenders.isEmpty, s"IVF-PQ format copied outside IvfPq: $offenders")
+  }
+
   test("parquet reads in main source declare their schema") {
     // an unpinned read.parquet( infers the schema with a Spark job on
     // every call; fixtures go through Tables.load and artifact tables

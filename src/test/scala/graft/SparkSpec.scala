@@ -10,9 +10,10 @@ object TestSession {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    // the events fixture is TIMESTAMP(NANOS) parquet; without this the
-    // FIRST spec to touch it decides whether registerAll works — pin it
-    // here so specs pass in any order
+    // a TIMESTAMP(NANOS) parquet file reads (as a nanos long) only
+    // behind this flag: StreamJobs.readEvents infers a stream
+    // directory's ts type and converts that case; the fixtures are
+    // read through Tables' declared TIMESTAMP_NTZ and do not need it
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     // static confs — must be set before the first session exists

@@ -8,14 +8,47 @@ Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already produced
 Spark result and its DuckDB-oracle result, sorts columns by name,
 compares row counts, column names, and values (with float tolerance
 reporting so we can see HOW far off a mismatch is).
+
+Every twin gets a bounded run, so the script always reaches its tally:
+DuckDB spills into <outDir>/.duckdb_tmp up to TEMP_LIMIT (a twin that
+needs more fails with DuckDB's error instead of filling the disk), and a
+twin still running after ORACLE_TIMEOUT_S seconds is interrupted. Either
+way the twin counts as a failure and the exit code is 1.
 """
-import json, sys, glob, math
+import json, sys, glob, math, threading
 import duckdb
 
+TEMP_LIMIT = "8GB"
+ORACLE_TIMEOUT_S = 600
+
+sys.stdout.reconfigure(line_buffering=True)
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
 con = duckdb.connect()
+con.execute(f"SET temp_directory = '{out}/.duckdb_tmp'")
+con.execute(f"SET max_temp_directory_size = '{TEMP_LIMIT}'")
+
+
+def run_oracle(sql):
+    """The twin's result, or None when it ran past ORACLE_TIMEOUT_S."""
+    fired = threading.Event()
+
+    def stop():
+        fired.set()
+        con.interrupt()
+
+    timer = threading.Timer(ORACLE_TIMEOUT_S, stop)
+    timer.start()
+    try:
+        return con.execute(sql).fetch_arrow_table()
+    except duckdb.InterruptException:
+        if fired.is_set():
+            return None
+        raise
+    finally:
+        timer.cancel()
+
 for p in glob.glob(f"{sf}/*.parquet"):
     name = p.split("/")[-1].replace(".parquet", "")
     con.execute(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{p}'")
@@ -30,9 +63,12 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         print(f"FAIL {name}: spark result unreadable: {e}"); fails += 1; continue
     try:
-        odf = con.execute(sql).fetch_arrow_table()
+        odf = run_oracle(sql)
     except Exception as e:
         print(f"FAIL {name}: oracle sql error: {e}"); fails += 1; continue
+    if odf is None:
+        print(f"FAIL {name}: oracle timed out after {ORACLE_TIMEOUT_S} s")
+        fails += 1; continue
 
     scols, ocols = sorted(sdf.column_names), sorted(odf.column_names)
     if scols != ocols:
